@@ -11,6 +11,7 @@ Usage:
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -41,39 +42,42 @@ def materialize(df) -> int:
     return row.n
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("mode", nargs="?", default="all",
+                    choices=["time", "plan", "all"])
+    ap.add_argument("names", nargs="*", help="query names (default: HEADLINE)")
+    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--noop", action="store_true",
+                    help="write to the noop sink instead of hashing rows")
+    ap.add_argument("--suffix", default="before",
+                    help="plan file suffix: plans/r07/<name>_<suffix>.txt")
+    return ap.parse_intermixed_args(argv)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    mode = sys.argv[1] if len(sys.argv) > 1 else "all"
-    args = [a for a in sys.argv[2:] if not a.startswith("--")]
-    reps = 3
-    if "--reps" in sys.argv:
-        reps = int(sys.argv[sys.argv.index("--reps") + 1])
-        args = [a for a in args if a != str(reps)]
-    use_noop = "--noop" in sys.argv
-    suffix = "before"
-    if "--suffix" in sys.argv:
-        suffix = sys.argv[sys.argv.index("--suffix") + 1]
-        args = [a for a in args if a != suffix]
+    args = parse_args()
 
     spark = get_spark(app="dq-bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
     qs = queries()
-    names = args or HEADLINE
-    if mode == "all":
+    names = args.names or HEADLINE
+    if args.mode == "all":
         names = HEADLINE
 
     # warmup: JVM + parquet footers + Python worker pool
     spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
-    if mode == "plan":
+    if args.mode == "plan":
         os.makedirs("plans/r07", exist_ok=True)
         for name in names:
             df = qs[name](spark, sf_dir)
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode
                 .fromString("formatted"))
-            path = f"plans/r07/{name}_{suffix}.txt"
+            path = f"plans/r07/{name}_{args.suffix}.txt"
             with open(path, "w") as f:
                 f.write(plan)
             print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
@@ -83,10 +87,10 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name in names:
         samples = []
-        for i in range(reps):
+        for i in range(args.reps):
             spark.sparkContext.setJobDescription(f"{name} rep{i}")
             t0 = time.perf_counter()
-            if use_noop:
+            if args.noop:
                 qs[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite").save()
             else:

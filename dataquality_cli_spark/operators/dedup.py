@@ -363,7 +363,9 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
 
     from .util import spread
 
-    sh = df.select(
+    # a NULL block is no block: the oracle's block = block equi-join
+    # never pairs two NULL-lang docs
+    sh = df.filter(F.col(block_col).isNotNull()).select(
         "doc_id", F.col(block_col).alias("block"),
         shingles_col(F.col(text_col)).alias("sh"),
     )
@@ -708,7 +710,8 @@ def _large_star(e: DataFrame) -> DataFrame:
 def _small_star(e: DataFrame) -> DataFrame:
     """Small-star operation: every node u connects its SMALLER-OR-SELF
     neighborhood to its minimum. Output edges are canonically oriented
-    (u > v), so the per-round edge-set signature is stable."""
+    (u > v, child > parent), which the star test in neardup_clusters
+    relies on."""
     directed = (
         e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -735,54 +738,45 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 50,
     rounds and hard-raised on chain-shaped boilerplate clusters (judge
     item r2 #3). Each round is two shuffle-join+agg passes over the edge
     set, which only SHRINKS (toward one star per component), and
-    localCheckpoint truncates the per-round lineage. Convergence is
-    detected by an edge-set signature (count + bit_xor of xxhash64) —
-    one tiny agg action per round, no exceptAll re-shuffle — then
-    confirmed EXACTLY by the star-shape invariant below, so a signature
-    collision can never return a wrong answer quietly.
+    localCheckpoint truncates the per-round lineage.
 
-    At fixpoint the edge set is a disjoint union of stars whose root is
-    the component minimum (a star rooted anywhere else is provably not a
-    fixpoint: large-star re-roots it), which is exactly the output."""
+    Stopping rule: small-star emits edges oriented child > parent, so
+    the set is a disjoint union of stars exactly when no node both has
+    a parent and is one, and no node has two distinct parents — one
+    groupBy-node aggregation per round. Each star is then rooted at its
+    component minimum (every child is larger than its root), and one
+    more round would return it unchanged, so stopping at the first
+    star-shaped round gives the fixpoint exactly, without a
+    confirmation round."""
     e = (
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
         .localCheckpoint()
     )
-
-    def signature(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("x"),
-        ).collect()[0]
-        return (row.n, row.x)
-
-    prev = None
-    rounds = 0
-    for _ in range(max_iter):
+    for rounds in range(1, max_iter + 1):
         e = _small_star(_large_star(e)).localCheckpoint()
-        rounds += 1
-        sig = signature(e)
-        if sig == prev:
+        # one row per (node, parent) and one parentless row per
+        # (parent, child): a node with parents and a parentless row is
+        # both child and root
+        per_node = e.select(F.col("u").alias("n"), F.col("v").alias("p")).union(
+            e.select(F.col("v"), F.lit(None).cast(e.schema["v"].dataType)))
+        viol = per_node.groupBy("n").agg(
+            F.min("p").alias("lo"), F.max("p").alias("hi"),
+            F.count("p").alias("n_p"), F.count(F.lit(1)).alias("n_all"),
+        ).filter(
+            ((F.col("n_p") > 0) & (F.col("n_all") > F.col("n_p")))
+            | (F.col("lo") != F.col("hi"))
+        ).count()
+        if not viol:
             break
-        prev = sig
-    if metrics_out is not None:
-        metrics_out["rounds"] = rounds
-    # exact fixpoint confirmation (guards the astronomically-unlikely
-    # signature collision): a converged set is a disjoint union of
-    # stars — no node is both child and root, and no child has two roots
-    viol = (
-        e.alias("c").join(e.alias("r"), F.col("c.v") == F.col("r.u")).count()
-        + e.groupBy("u").agg(F.countDistinct("v").alias("n"))
-        .filter(F.col("n") > 1).count()
-    )
-    if viol:
+    else:
         raise RuntimeError(
             f"neardup_clusters star contraction did not converge in "
-            f"{max_iter} rounds ({viol} non-star edges); O(log n) rounds "
-            f"suffice for any graph — raise max_iter"
+            f"{max_iter} rounds; O(log n) rounds suffice for any graph "
+            f"— raise max_iter"
         )
+    if metrics_out is not None:
+        metrics_out["rounds"] = rounds
     children = e.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
     roots = e.select(F.col("v").alias("doc_id"), F.col("v").alias("cluster_id")).distinct()
     return children.union(roots)

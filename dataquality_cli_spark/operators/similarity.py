@@ -122,7 +122,9 @@ def neardup_pairs_lsh(df: DataFrame, threshold: float = 0.95,
     # ~1.1 s warm.
     from .dedup import cap_buckets
 
-    b = df.select(
+    # a NULL vector has no cosine to anything (and would fail the
+    # kernel's float array): it never enters a bucket
+    b = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col), F.col(vec_col).alias("_v"),
         F.posexplode(buckets).alias("table", "bucket")
     ).persist(StorageLevel.MEMORY_AND_DISK)

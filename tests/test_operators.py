@@ -713,6 +713,8 @@ def test_neardup_clusters_long_chain_converges_logarithmically(spark):
            for r in neardup_clusters(chain, metrics_out=metrics).collect()}
     assert got == {i: 0 for i in range(129)}
     assert metrics["rounds"] <= 12, metrics
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        neardup_clusters(chain, max_iter=1)
     # two components + reversed-order pairs: labels are per-component minima
     two = spark.createDataFrame(
         [(5, 4), (4, 3), (90, 91), (91, 92), (92, 90)],
@@ -785,9 +787,6 @@ def test_neardup_clusters_matches_union_find(spark):
     @settings(max_examples=8, deadline=None)
     @given(edges=st.lists(edge, min_size=1, max_size=40))
     def check(edges):
-        real = [(a, b) for a, b in edges if a != b]
-        if not real:
-            return
         parent: dict[int, int] = {}
 
         def find(x):
@@ -797,16 +796,34 @@ def test_neardup_clusters_matches_union_find(spark):
                 x = parent[x]
             return x
 
-        for a, b in real:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
+        for a, b in edges:
+            if a != b:  # a self-loop alone puts no doc in a cluster
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    parent[max(ra, rb)] = min(ra, rb)
         expected = {x: find(x) for x in parent}
-        df = spark.createDataFrame(real, "id_a long, id_b long")
-        got = {r.doc_id: r.cluster_id for r in neardup_clusters(df).collect()}
-        assert got == expected, (sorted(real), got, expected)
+        # the raw edges go in: self-loops, duplicates and reversed pairs
+        df = spark.createDataFrame(edges, "id_a long, id_b long")
+        rows = neardup_clusters(df).collect()
+        got = {r.doc_id: r.cluster_id for r in rows}
+        assert got == expected, (sorted(edges), got, expected)
+        assert len(rows) == len(got), "a doc_id appears twice"
 
     check()
+
+
+def test_neardup_clusters_stops_at_first_star(spark):
+    """An edge set that is already a star rooted at its minimum is the
+    fixpoint: contraction stops after the round that finds it, with no
+    confirmation round."""
+    from dataquality_cli_spark.operators.dedup import neardup_clusters
+
+    star = spark.createDataFrame([(1, 2), (1, 3)], "id_a long, id_b long")
+    metrics: dict = {}
+    got = {r.doc_id: r.cluster_id
+           for r in neardup_clusters(star, metrics_out=metrics).collect()}
+    assert got == {1: 1, 2: 1, 3: 1}
+    assert metrics["rounds"] == 1, metrics
 
 
 def test_neardup_clusters_empty_pairs(spark):
@@ -814,6 +831,31 @@ def test_neardup_clusters_empty_pairs(spark):
 
     empty = spark.createDataFrame([], "id_a long, id_b long")
     assert neardup_clusters(empty).count() == 0
+
+
+def test_ngram_jaccard_null_lang_matches_oracle(spark):
+    """NULL-lang docs form no block: the DuckDB oracle's block = block
+    equi-join never pairs them, so neither may the operator — even when
+    they are exact copies that would top the ranking."""
+    import duckdb
+    import pandas as pd
+
+    from __spark_entry__ import oracle_sql
+
+    base = "the quick brown fox jumps over the lazy dog near the river "
+    rows = [
+        (1, base, "en"), (2, base + "bank", "en"), (3, base + "side", "en"),
+        (4, base * 2, None), (5, base * 2, None), (6, base, None),
+        (7, base + "bank", "de"), (8, "an unrelated text of its own", "de"),
+    ]
+    pdf = pd.DataFrame(rows, columns=["doc_id", "text", "lang"])
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    want = sorted(con.sql(oracle_sql()["dedup_ngram_jaccard_top"]).fetchall())
+    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    got = sorted(tuple(r) for r in dedup.ngram_jaccard_pairs(df).collect())
+    assert got == want
+    assert {(1, 2), (1, 3), (2, 3), (7, 8)} == {(a, b) for a, b, _ in got}
 
 
 def test_select_representatives_picks_best_score(spark):
@@ -923,6 +965,22 @@ def test_emb_neardup_lsh_recall_vs_exact(spark, emb):
     # find a healthy share of what label blocking finds
     if exact:
         assert len(got & exact) / len(exact) >= 0.5
+
+
+def test_emb_neardup_lsh_skips_null_vector(spark, emb):
+    """A NULL embedding lands in no bucket: the run does not raise, and
+    every pair among the other vectors is unchanged."""
+    dups = emb.filter(F.col("vec_id") < 10).withColumn(
+        "vec_id", F.col("vec_id") + 100_000)
+    aug = emb.unionByName(dups)
+    null_row = emb.limit(1).select(
+        F.lit(999_999).cast("long").alias("vec_id"),
+        F.lit(None).cast("array<float>").alias("embedding"),
+        F.col("label"))
+    want = sorted(similarity.neardup_pairs_lsh(aug, threshold=0.80).collect())
+    got = sorted(similarity.neardup_pairs_lsh(
+        aug.unionByName(null_row), threshold=0.80).collect())
+    assert want and got == want
 
 
 def test_drift_psi_detects_planted_shift(spark):
