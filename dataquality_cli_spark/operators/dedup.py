@@ -747,14 +747,17 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 50,
     component minimum (every child is larger than its root), and one
     more round would return it unchanged, so stopping at the first
     star-shaped round gives the fixpoint exactly, without a
-    confirmation round."""
+    confirmation round. Each round's eager checkpoint releases the one
+    before it, through its RDD (DataFrame.unpersist does not reach
+    checkpoint blocks); the last one, which the output reads, stays."""
     e = (
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .localCheckpoint()
     )
     for rounds in range(1, max_iter + 1):
-        e = _small_star(_large_star(e)).localCheckpoint()
+        prev, e = e, _small_star(_large_star(e)).localCheckpoint()
+        prev._jdf.queryExecution().analyzed().rdd().unpersist(False)
         # one row per (node, parent) and one parentless row per
         # (parent, child): a node with parents and a parentless row is
         # both child and root

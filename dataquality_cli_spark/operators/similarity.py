@@ -385,17 +385,9 @@ def _write_batch_partitions(df: DataFrame, path: str,
     """Dynamic-overwrite write of ONE batch's partitions: a retried add
     replaces exactly its own (batch=..., ...) leaves instead of
     appending duplicates — assignment is deterministic, so a retry
-    produces the same leaves and the write is idempotent. Conf scoped
-    + restored (the sink.py convention)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols) \
-            .parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    produces the same leaves and the write is idempotent."""
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+        .partitionBy(*partition_cols).parquet(path)
 
 
 def _check_batch_id(batch_id: str) -> str:

@@ -14,6 +14,8 @@ Checkpoint/resume: verdicts are written partitioned by ``part_id =
 pmod(xxhash64(repo, path), n_parts)``; a metrics table records completed
 partitions; a rerun anti-joins completed part_ids and only processes the
 remainder (idempotent — deterministic UDFs, no time/random dependence).
+Each part is scored once: its manifest counts are read back from the
+partition just written. Dynamic overwrite is an option of that write only.
 """
 
 from __future__ import annotations
@@ -128,7 +130,9 @@ def run_with_checkpoint(spark: SparkSession, df: DataFrame, out_dir: str,
     """Process partition groups one at a time, appending data THEN the
     manifest row (atomic-enough ordering: a partition is only marked done
     after its data is fully written; rerun overwrites any partial
-    unmarked partition via dynamic partition overwrite).
+    unmarked partition via dynamic partition overwrite, an option of the
+    data write alone). Each part is scored once: its manifest rows are
+    counted from the partition just written (an empty part counts nothing).
 
     ``fail_after_parts`` is a test hook simulating a mid-job kill.
     ``bc``: an existing model broadcast, or a ZERO-ARG FACTORY for one
@@ -146,17 +150,17 @@ def run_with_checkpoint(spark: SparkSession, df: DataFrame, out_dir: str,
     staged = _with_part_id(df, n_parts)
     data_dir = os.path.join(out_dir, "data")
     manifest = os.path.join(out_dir, "_manifest")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     for i, p in enumerate(parts):
         if fail_after_parts is not None and i >= fail_after_parts:
             raise RuntimeError("simulated mid-job failure")
         chunk = staged.filter(F.col("part_id") == p)
-        verdicts = run_pipeline(spark, chunk, bc=bc)
-        (verdicts.select(*VERDICT_COLS, "part_id")
-         .write.mode("overwrite").partitionBy("part_id").parquet(data_dir))
+        verdicts = run_pipeline(spark, chunk, bc=bc).select(*VERDICT_COLS, "part_id")
+        (verdicts.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy("part_id").parquet(data_dir))
         metrics = (
-            verdicts.groupBy("drop_reason")
+            spark.read.schema(verdicts.schema).parquet(data_dir).where(F.col("part_id") == p)
+            .groupBy("drop_reason")
             .agg(F.count("*").alias("n"), F.sum("total_scrub_hits").alias("scrub_hits"))
             .withColumn("part_id", F.lit(p))
             .withColumn("run_id", F.lit(run_id))

@@ -69,16 +69,15 @@ def write_corpus_sharded(df: DataFrame, path: str,
         staged.repartition(*[F.col(c) for c in keys])
         .sortWithinPartitions(*keys, key_col)
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    writer = out.write.mode(mode)
     if dynamic:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        writer = writer.option("partitionOverwriteMode", "dynamic")
     try:
-        out.write.mode(mode).partitionBy(*keys).parquet(path)
+        writer.partitionBy(*keys).parquet(path)
     finally:
-        # restore + unpersist even when the write raises: a leaked
-        # persisted frame in a long-lived driver outlives the failure
+        # unpersist even when the write raises: a leaked persisted
+        # frame in a long-lived driver outlives the failure
         if dynamic:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             staged.unpersist()
     if dynamic and new_leaves:
         _cleanup_stale_shards(spark, path, partition_cols, new_leaves)

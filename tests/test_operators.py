@@ -724,6 +724,28 @@ def test_neardup_clusters_long_chain_converges_logarithmically(spark):
     assert got2 == {3: 3, 4: 3, 5: 3, 90: 90, 91: 90, 92: 90}
 
 
+def test_neardup_clusters_releases_earlier_rounds(spark):
+    """Each round's checkpoint releases the one before it: a call on the
+    128-node chain (several rounds) leaves at most the last round's
+    checkpoint persisted, which its output reads."""
+    from dataquality_cli_spark.operators.dedup import neardup_clusters
+
+    def persisted_ids():
+        return set(
+            spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(128)], "id_a long, id_b long"
+    )
+    for _ in range(2):
+        before = persisted_ids()
+        metrics: dict = {}
+        out = neardup_clusters(chain, metrics_out=metrics)
+        assert metrics["rounds"] > 1, metrics
+        assert len(persisted_ids() - before) <= 1
+        assert out.filter(F.col("cluster_id") == 0).count() == 129
+
+
 def test_lsh_incremental_matches_full_run_for_new_pairs(spark, docs, aug):
     """Incremental candidates (new batch vs existing band index) must
     equal the full run's pairs that touch a new doc — and never emit an
