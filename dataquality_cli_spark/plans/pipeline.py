@@ -109,17 +109,19 @@ def completed_parts(spark: SparkSession, out_dir: str) -> set[int]:
     """Completed partition ids from the manifest, read through SPARK so
     resume also works for hdfs://... / s3a://... output dirs (an
     os.path probe is always False there and would silently disable
-    resume). Iceberg deployment: a snapshot-metadata query instead."""
-    from pyspark.errors import AnalysisException
+    resume). Iceberg deployment: a snapshot-metadata query instead.
 
+    A missing manifest (not written yet) is probed through the Hadoop
+    FileSystem of its path, so a fresh dir logs no failed read; the read
+    itself stays strict: a schema-drifted/corrupt manifest raises loudly
+    rather than being misread as 'not written yet' (which would silently
+    reprocess every partition and double-append metrics)."""
     manifest = os.path.join(out_dir, "_manifest")
-    try:
-        # try-scope ONLY the read: a schema-drifted/corrupt manifest must
-        # raise loudly, not be misread as 'not written yet' (which would
-        # silently reprocess every partition and double-append metrics)
-        mdf = spark.read.parquet(manifest)
-    except AnalysisException:  # not written yet
+    sc = spark.sparkContext
+    path = sc._jvm.org.apache.hadoop.fs.Path(manifest)
+    if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):
         return set()
+    mdf = spark.read.parquet(manifest)
     return {r.part_id for r in mdf.select("part_id").distinct().collect()}
 
 

@@ -1,0 +1,42 @@
+"""The first checkpointed run into a new output dir logs no failed read of
+the resume manifest that does not exist yet."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+FRESH_RUN = """
+import os, sys
+sys.path.insert(0, {repo!r})
+from dataquality_cli_spark.plans import pipeline as P
+from dataquality_cli_spark.session import get_spark
+from dataquality_cli_spark.sources.synth import corpus_to_rows, gen_corpus
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+df = spark.createDataFrame(
+    corpus_to_rows(gen_corpus(20, seed=5)),
+    "repo string, path string, commit string, lang string, content string")
+P.run_with_checkpoint(spark, df, {out!r}, n_parts=2)
+print("wrote", sorted(os.listdir({out!r})))
+spark.stop()
+"""
+
+
+def test_fresh_checkpoint_dir_logs_no_manifest_trace(tmp_path, capfd):
+    """The JVM writes its log to the stderr it inherited, so the run goes
+    through a fresh interpreter (and JVM) started under capfd. (A later
+    read of an existing manifest still logs Spark's one-line "All paths
+    were ignored" warning for the underscore-named dir; that is not
+    checked here.)"""
+    out = str(tmp_path / "out")
+    proc = subprocess.run(
+        [sys.executable, "-c", FRESH_RUN.format(repo=REPO, out=out)],
+        timeout=300, cwd=REPO)
+    stdout, stderr = capfd.readouterr()
+    assert proc.returncode == 0, stderr[-2000:]
+    assert "wrote ['_manifest', 'data']" in stdout
+    assert "_manifest" not in stderr, stderr[-2000:]

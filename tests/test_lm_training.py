@@ -142,6 +142,42 @@ def test_corpus_trained_models_reach_the_pipeline(spark):
     assert n_keep > len(trained) * 0.5
 
 
+def test_quality_classifier_single_partition_fast_path_parity(spark):
+    """A 1-partition input runs every iteration in one task; the same rows
+    in 4 partitions take the per-iteration distributed loop. Both fits
+    agree to float-summation noise and label every row the same."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from dataquality_cli_spark.functions.models import (
+        quality_classifier_score_col, train_quality_classifier_distributed)
+
+    rng = random.Random(7)
+    rows = []
+    for i in range(300):
+        y = i % 2
+        rows.append((i, rng.gauss(2.0 + y, 0.8), rng.gauss(20.0 - 8.0 * y, 5.0),
+                     rng.gauss(0.0, 1.0), y))
+    one = spark.createDataFrame(
+        rows, "doc_id long, f1 double, f2 double, f3 double, label int").repartition(1)
+    four = one.repartition(4)
+    assert (one.rdd.getNumPartitions(), four.rdd.getNumPartitions()) == (1, 4)
+    feats = ["f1", "f2", "f3"]
+    fast = train_quality_classifier_distributed(one, feats, n_iter=30)
+    loop = train_quality_classifier_distributed(four, feats, n_iter=30)
+    assert np.allclose(fast["w"], loop["w"], rtol=0, atol=1e-9)
+    assert np.allclose(fast["b"], loop["b"], rtol=0, atol=1e-9)
+    assert fast["n"] == loop["n"] == 300
+
+    def labels(model):
+        return {r.doc_id: r.pred for r in one.select(
+            "doc_id", (quality_classifier_score_col(model) > 0.5).alias("pred")).collect()}
+
+    assert labels(fast) == labels(loop)
+    assert 0 < sum(labels(fast).values()) < 300
+
+
 def test_quality_classifier_trainer_parity_and_recovery(spark):
     """Distributed logistic regression: numpy-parity with a driver-side
     reference loop (same standardization, same updates), partition

@@ -2878,6 +2878,46 @@ def test_table_buckets_udf_matches_expression_twin(spark, emb):
     assert got == want
 
 
+def test_table_buckets_udf_knife_edge(spark):
+    """Vectors whose dot product with a plane is exactly 0.0 or +-1e-12
+    (products by +-1 and 0 are exact, so every summation order gives the
+    same value): the Arrow kernel, the column-expression twin and a numpy
+    reference agree on every bucket id, with 0.0 mapped to bit 0."""
+    import numpy as np
+
+    from dataquality_cli_spark.operators import similarity as S
+
+    dim, n_tables = 8, 2
+    planes = S.hyperplanes(dim, 8, seed=41)
+    planes[0] = [1.0, -1.0, 0, 0, 0, 0, 0, 0]   # table 0, bit 0
+    planes[5] = [0, 0, 0, 0, 0, 0, 1.0, 0]      # table 1, bit 1
+    rng = np.random.RandomState(3)
+    vecs = []
+    for a, b, c in [(0.3, 0.3, 0.0), (1e-12, 0.0, 1e-12), (-1e-12, 0.0, -1e-12),
+                    (0.0, 1e-12, 0.0), (0.0, -1e-12, -0.0), (0.0, 0.0, 0.0)]:
+        v = rng.standard_normal(dim)
+        v[0], v[1], v[6] = a, b, c
+        vecs.append(v)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id int, embedding array<double>")
+    got = {r.vec_id: r.b for r in df.select(
+        "vec_id", S._table_buckets_udf(planes, n_tables)(F.col("embedding")).alias("b"))
+        .collect()}
+    twin = {r.vec_id: r.b for r in df.select(
+        "vec_id", S._table_buckets(F.col("embedding"), planes, n_tables).alias("b"))
+        .collect()}
+    per = len(planes) // n_tables
+    ref = {}
+    for i, v in enumerate(vecs):
+        bits = [float(np.dot(v, plane)) > 0 for plane in planes]
+        ref[i] = [sum(int(bits[t * per + j]) << j for j in range(per)) for t in range(n_tables)]
+    assert got == twin == ref
+    # the planted edges: exact 0.0 is bit 0, +1e-12 is bit 1
+    assert [ref[i][0] & 1 for i in range(6)] == [0, 1, 0, 0, 1, 0]
+    assert [(ref[i][1] >> 1) & 1 for i in range(6)] == [0, 1, 0, 0, 0, 0]
+
+
 def test_remove_spans_persisted_windows_byte_identity(spark):
     """r7 pin for the persisted-window-table optimization: full
     remove_repeated_spans output (n_tokens / n_tokens_removed /
