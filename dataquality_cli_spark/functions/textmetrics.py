@@ -1,20 +1,21 @@
 """Batch (Arrow-vectorized) implementation of the per-file heuristic
-metrics + scrub for the pipeline hot path.
+metrics + scrub: the pipeline's only implementation of both, run inside
+the fused scoring UDF (functions/udfs.py).
 
-Why this exists alongside the Column-expression versions in rules.py:
-the interpreted higher-order-function expressions are ALLOCATION-BOUND —
-at 32 local cores the single shared JVM heap turns young-gen GC into the
+Why Python and not Column expressions: the interpreted higher-order-
+function versions these replaced were ALLOCATION-BOUND — at 32 local
+cores the single shared JVM heap turned young-gen GC into the
 bottleneck (measured: per-op probes scale, the combined projection
 anti-scales 13s@8 -> 19s@32; ParallelGC young pauses up to 3.9 s).
 Python workers are separate processes with isolated heaps, so the same
-work scales near-linearly (measured 89%% efficiency 8->32 procs). The
-Column versions remain the right choice for SQL-oracle queries and
-moderate parallelism; this is the 100TB hot path, per the north rule's
-'vectorized pandas/Arrow UDFs (no per-row Python UDFs) throughout'.
+work scales near-linearly (measured 89%% efficiency 8->32 procs), per
+the north rule's 'vectorized pandas/Arrow UDFs (no per-row Python
+UDFs) throughout'.
 
 Semantics are PINNED to oracle.py (same blank chars, same token
 separator, same regexes via the same `re` module — scrub parity is
-exact by construction).
+exact by construction); tests/test_rules.py and tests/test_scrub.py
+compare metrics_one / scrub_one with it directly.
 """
 
 from __future__ import annotations

@@ -1,5 +1,6 @@
-"""Vectorized pandas/Arrow UDFs for the model stages (the ONLY Python in
-the pipeline's hot path; everything else is built-in expressions).
+"""Vectorized pandas/Arrow UDFs for the scoring stages (the ONLY Python in
+the pipeline's hot path: models, heuristic metrics and scrub in one
+fused UDF; the verdict on top is built-in expressions).
 
 The model weights (numpy arrays) are shipped via
 ``SparkContext.broadcast`` — one copy per executor, not per task

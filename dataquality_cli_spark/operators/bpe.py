@@ -215,7 +215,9 @@ def bpe_reference(word_freq: dict[str, int], n_merges: int,
 def bpe_tokenize(df: DataFrame, merges: list[dict],
                  text_col: str = "text") -> DataFrame:
     """Apply a learned merge list: (doc_id, bpe_tokens, n_bpe_tokens).
-    The merges ship to executors as ONE broadcast (bounded: k entries).
+    The merges (bounded: k pairs) are captured in the UDF closure and
+    ship with the task command, so no SparkContext broadcast outlives
+    the plan.
     Encoding applies the merges in training order with the same greedy
     left-to-right fold as training, so encode(train_corpus) reproduces
     the exact symbol sequences training ended with (pytest-pinned).
@@ -225,16 +227,14 @@ def bpe_tokenize(df: DataFrame, merges: list[dict],
     per-word Python cost is paid once per distinct word, not once per
     occurrence — the same "reduce to the vocabulary" move the trainer
     makes. (Real deployments swap this UDF for a native tokenizer
-    library; the plumbing — broadcast artifact, Arrow batches, array
+    library; the plumbing — shipped artifact, Arrow batches, array
     output — is what this operator pins down.)"""
     from pyspark.sql.functions import pandas_udf
 
-    merge_pairs = [(m["left"], m["right"]) for m in merges]
-    bc = df.sparkSession.sparkContext.broadcast(merge_pairs)
+    pairs = [(m["left"], m["right"]) for m in merges]
 
     @pandas_udf("array<string>")
     def enc(texts: pd.Series) -> pd.Series:
-        pairs = bc.value
         cache: dict[str, list[str]] = {}
 
         def encode_word(w: str) -> list[str]:

@@ -41,38 +41,15 @@ def shingles_col(text: Column, k: int = SHINGLE_LEN) -> Column:
     )
 
 
-def minhash_signature(text: Column, n_hashes: int = N_HASHES) -> list[Column]:
-    """MinHash via min over md5 hex strings with per-hash salt. String min
-    is lexicographic in both engines; md5 hex is lowercase in both.
-
-    Measured dead end (r3, sf0.1 warm): folding all n mins into ONE
-    F.aggregate() pass with a struct accumulator (to avoid re-deriving
-    the shingle array per hash) is ~10% SLOWER (median 0.60s vs 0.54s)
-    — the shingle subexpression is already shared across the n
-    projections, and the fold adds per-element struct churn. Keep the n
-    independent array_min(transform(...)) expressions."""
-    sh = shingles_col(text)
-
-    def salted(j: int):
-        # single-arg lambda only: a 2-arg lambda in F.transform is
-        # interpreted as (element, index) by PySpark
-        prefix = f"salt{j}:"
-        return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
-    return [
-        F.array_min(F.transform(sh, salted(j))).alias(f"mh{j}")
-        for j in range(n_hashes)
-    ]
-
-
 def _minhash_batch_fn(text_col: str, n_hashes: int = N_HASHES,
                       k: int = SHINGLE_LEN):
     """Per-batch MinHash kernel for the mapInPandas path below: distinct
     char k-gram shingles per doc (Python slicing is by codepoint, same
     as Spark substring), then min over salted md5 hex digests — C-speed
     hashlib instead of per-shingle interpreted JVM expression trees.
-    Byte-identical to :func:`minhash_signature` (parity pytest-pinned,
-    including empty/short/non-ASCII/NULL text)."""
+    The portable md5 minima equal the DuckDB ``dedup_minhash_signatures``
+    oracle query (parity pytest-pinned, including empty/short/non-ASCII/
+    NULL text)."""
     salts = [f"salt{j}:".encode() for j in range(n_hashes)]
 
     def fn(batches):
@@ -116,11 +93,12 @@ def _minhash_batch_fn(text_col: str, n_hashes: int = N_HASHES,
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, mh0..mh5) — signature values identical to the
-    :func:`minhash_signature` column expressions (the DuckDB-oracle
-    twin), computed in ONE vectorized-ish mapInPandas pass: the salted
-    md5 minima run through C hashlib on Arrow batches instead of ~6 x
-    doc_len interpreted HOF md5 expression calls per doc. Measured at
+    """(doc_id, mh0..mh5) — per salt j, the min over distinct char
+    8-gram shingles of md5('salt{j}:' || shingle) hex (the DuckDB
+    ``dedup_minhash_signatures`` oracle's definition), computed in ONE
+    mapInPandas pass: the salted md5 minima run through C hashlib on
+    Arrow batches instead of ~6 x doc_len interpreted HOF md5 expression
+    calls per doc. Measured at
     sf0.1 (local[32], warm): ~0.87s vs ~1.1s for the JVM HOF path in
     isolation, and markedly less JVM garbage in suite context (the HOF
     path allocates ~9M UTF8Strings per 5k docs). Only (doc_id, text)
@@ -186,7 +164,7 @@ def cap_buckets(bands: DataFrame, key_cols: list[str],
                 metrics_out: dict | None = None) -> DataFrame:
     """Drop LSH buckets larger than ``max_bucket_size`` — the shared
     boilerplate-flood guard for every banded-LSH flow (MinHash document
-    dedup, the numpy fast path, hyperplane embedding near-dup).
+    dedup, hyperplane embedding near-dup).
 
     Shape (the measured-best of the three shapes r1/r2 tried): over-full
     buckets are RARE by construction (each is a mega-cluster of
@@ -222,13 +200,9 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
     plan is dropped.
 
     Signatures come from the hashlib mapInPandas kernel in
-    ``minhash_signatures`` as of r7 (the r3-era note that the JVM HOF
-    path beat a numpy variant compared against the 16-hash
-    multiply-shift path below, which pays 16 hash passes; the 6-salt
-    hashlib kernel computes the SAME portable md5 minima ~20-30 %
-    faster with far less JVM garbage — see that function's docstring).
-    The 16-hash ``fast_*`` variants below remain the banding-PRECISION
-    alternative (steeper S-curve), not a speed path.
+    ``minhash_signatures`` (the portable md5 minima, ~20-30 % faster
+    than the JVM HOF expressions with far less JVM garbage — see that
+    function's docstring).
 
     ``max_bucket_size`` drops buckets bigger than the cap before pairing
     — the 100 TB guard against quadratic candidate blowup from
@@ -538,116 +512,6 @@ def simhash_neardup_pairs(df: DataFrame, text_col: str = "text",
     return hamming_band_pairs(
         simhash_signatures(df, text_col), "doc_id", "simhash",
         max_hamming=max_hamming, n_bands=n_bands)
-
-
-# ---------------------------------------------------------------------------
-# alternative MinHash: vectorized numpy multiply-shift hashing in a
-# pandas UDF, 16 hashes in 4 bands of 4 — a steeper LSH S-curve (higher
-# candidate precision) than the portable 6/2 config. Not DuckDB-portable.
-# Measured honestly at sf0.1 (short docs): ~4.5s warm vs ~1.9s for the
-# JVM md5 path — Arrow text transfer + 16 hash passes dominate on short
-# documents, so this is the precision knob, not a speed path; it would
-# only win on long-document corpora where per-shingle JVM md5 cost
-# (O(doc_len) interpreted HOF calls) outgrows the fixed Arrow overhead.
-# ---------------------------------------------------------------------------
-
-_FAST_N_HASHES = 16
-_FAST_N_BANDS = 4
-# odd 64-bit multipliers for the multiply-shift family (fixed seed set)
-_FAST_MULTS = np.array(
-    [0x9E3779B97F4A7C15 + 2 * k + 1 for k in range(_FAST_N_HASHES)],
-    dtype=np.uint64,
-)
-
-
-def _fast_signature_block(texts: pd.Series, k: int = SHINGLE_LEN) -> np.ndarray:
-    """(len(texts), N_HASHES) uint64 MinHash matrix with NO per-document
-    Python loop in the hash path: concatenate the whole Arrow batch's
-    bytes, compute every k-byte window's polynomial hash over the
-    concatenation in one strided pass, poison windows that cross a
-    document boundary, then take per-document minima with ONE
-    np.minimum.reduceat per hash function. (Min over the multiset
-    equals min over the set, so no shingle dedup is needed.)"""
-    n = len(texts)
-    maxu = np.iinfo(np.uint64).max
-    out = np.full((n, _FAST_N_HASHES), maxu, dtype=np.uint64)
-    encoded = [(t or "").encode("utf-8", "ignore") for t in texts]
-    lens = np.fromiter((len(e) for e in encoded), dtype=np.int64, count=n)
-    if lens.sum() == 0:
-        return out
-    concat = np.frombuffer(b"".join(encoded), dtype=np.uint8)
-    if len(concat) < k:
-        return out
-    powers = np.power(np.uint64(1099511628211), np.arange(k, dtype=np.uint64))
-    win = np.lib.stride_tricks.sliding_window_view(concat, k).astype(np.uint64)
-    base = (win * powers).sum(axis=1, dtype=np.uint64)  # one hash per window
-    starts = np.concatenate(([0], np.cumsum(lens)))[:-1]
-    ends = starts + lens
-    # poison windows whose k bytes cross a doc boundary (the last k-1
-    # window positions of each doc), and note docs with no valid window
-    for s, e in zip(starts, ends):
-        if e - s >= k:
-            base[max(0, e - k + 1): e] = maxu
-        else:
-            base[s:e] = maxu
-    seg = np.clip(starts, 0, len(base) - 1)
-    valid = (lens >= k)
-    for j in range(_FAST_N_HASHES):
-        h = base * _FAST_MULTS[j]
-        h[base == maxu] = maxu  # keep poison after multiply
-        mins = np.minimum.reduceat(h, seg)
-        out[:, j] = np.where(valid, mins[:n], maxu)
-    return out
-
-
-def fast_minhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
-    cols = [f"fmh{j}" for j in range(_FAST_N_HASHES)]
-
-    @pandas_udf("array<long>")
-    def sig(texts: pd.Series) -> pd.Series:
-        m = _fast_signature_block(texts).astype(np.int64)  # reinterpret bits
-        return pd.Series(list(m))
-
-    out = df.select("doc_id", sig(F.col(text_col)).alias("_sig"))
-    return out.select(
-        "doc_id", *[F.col("_sig")[j].alias(c) for j, c in enumerate(cols)]
-    )
-
-
-def fast_lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
-                             max_bucket_size: int | None = 64) -> DataFrame:
-    """Same band/bucket/self-join shape as lsh_candidate_pairs, over the
-    numpy signatures: 16 hashes in 4 bands of 4 (steeper S-curve than
-    the portable 6/2 config — fewer false candidates at scale)."""
-    from pyspark import StorageLevel
-
-    sc = df.sparkSession.sparkContext
-    spread = df.repartition(sc.defaultParallelism)
-    sig = fast_minhash_signatures(spread, text_col)
-    per_band = _FAST_N_HASHES // _FAST_N_BANDS
-    # one projection + stack (NOT a union of branches, which would run
-    # the signature UDF once per band)
-    wide = sig.select(
-        "doc_id",
-        *[
-            F.xxhash64(*[F.col(f"fmh{b * per_band + i}") for i in range(per_band)])
-            .alias(f"bh{b}")
-            for b in range(_FAST_N_BANDS)
-        ],
-    )
-    stack_args = ", ".join(f"{b}, bh{b}" for b in range(_FAST_N_BANDS))
-    bands = wide.select(
-        "doc_id",
-        F.expr(f"stack({_FAST_N_BANDS}, {stack_args}) AS (band_id, band_hash)"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    bands = cap_buckets(bands, ["band_id", "band_hash"], max_bucket_size)
-    a, b2 = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(b2, ["band_id", "band_hash"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
 
 
 DEFAULT_MAX_BUCKET = 64
@@ -1159,15 +1023,20 @@ def remove_boilerplate_lines(df: DataFrame, text_col: str = "text",
     """Rewrite every doc with corpus-boilerplate lines dropped (blank
     lines and untouched content preserved byte-identically — the
     remove_repeated_spans contract at line granularity). The capped
-    boilerplate hash set rides a 1-row broadcast crossJoin into a pure
-    HOF filter, so document bodies NEVER shuffle; only the tiny census
-    aggregate moves. Returns (doc_id, text, n_lines_removed)."""
+    boilerplate census is collected as a frozenset of line md5s and
+    captured in the mapInPandas closure, so it ships with the task
+    command and lives exactly as long as the plan; document bodies
+    NEVER shuffle, only the tiny census aggregate moves. Returns
+    (doc_id, text, n_lines_removed)."""
     # r7: O(1) membership. The previous shape tested every line with
     # array_contains over the broadcast census array — O(|census|)
     # string compares per LINE (the r6 verdict's perf_weak #2: 10k md5
     # compares per line at the cap). The census is BOUNDED by
     # ``max_lines`` (~320 KB of md5 hex at 10k), so collect it once,
-    # ship it as a SparkContext broadcast, and rewrite each doc in a
+    # capture it in the kernel's closure (PySpark ships it with the
+    # command, broadcasting the command itself above 1 MB with the
+    # PythonRDD's lifetime — no SparkContext broadcast left behind to
+    # release), and rewrite each doc in a
     # mapInPandas kernel against a Python frozenset — hash lookup per
     # line instead of a linear scan, C-speed hashlib md5 instead of the
     # per-line interpreted JVM md5. Document bodies still never
@@ -1180,15 +1049,12 @@ def remove_boilerplate_lines(df: DataFrame, text_col: str = "text",
 
     bp_rows = boilerplate_lines(df, text_col, min_docs, max_lines) \
         .select(F.md5("line").alias("h")).collect()
-    bp_set = frozenset(r["h"] for r in bp_rows)
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(bp_set)
+    bp = frozenset(r["h"] for r in bp_rows)
     id_type = df.schema["doc_id"].dataType.simpleString()
 
     def rewrite(batches):
         import hashlib
 
-        bp = bc.value
         for pdf in batches:
             out_id, out_text, out_removed = [], [], []
             for did, txt in zip(pdf["doc_id"], pdf[text_col]):

@@ -58,48 +58,6 @@ def weighted_numeric_aggs(num, cnt) -> dict:
     }
 
 
-def numeric_profile(df: DataFrame, cols: list[str], group_by: list[str] | None = None,
-                    exact_quantiles: bool = True, round_to: int = 4) -> DataFrame:
-    """count / nulls / mean / stddev_pop / min / max / q25 / q50 / q75 per
-    numeric column, optionally per group. One aggregation pass."""
-    aggs = []
-    for c in cols:
-        q = (
-            F.expr(f"percentile({c}, array(0.25, 0.5, 0.75))")
-            if exact_quantiles
-            else F.percentile_approx(c, [0.25, 0.5, 0.75], 10_000)
-        )
-        aggs += [
-            F.count(F.lit(1)).alias(f"{c}_rows"),
-            F.count(c).alias(f"{c}_count"),
-            (F.count(F.lit(1)) - F.count(c)).alias(f"{c}_nulls"),
-            F.round(F.avg(c), round_to).alias(f"{c}_mean"),
-            F.round(F.stddev_pop(c), round_to).alias(f"{c}_std"),
-            F.round(F.min(c), round_to).alias(f"{c}_min"),
-            F.round(F.max(c), round_to).alias(f"{c}_max"),
-            F.round(q[0], round_to).alias(f"{c}_q25"),
-            F.round(q[1], round_to).alias(f"{c}_q50"),
-            F.round(q[2], round_to).alias(f"{c}_q75"),
-        ]
-    return df.groupBy(*(group_by or [])).agg(*aggs)
-
-
-def unique_and_top1(df: DataFrame, col: str, group_by: list[str] | None = None) -> DataFrame:
-    """Exact distinct count + top-1 value with frequency (tie-break: value
-    ascending — pinned for determinism)."""
-    gb = group_by or []
-    counted = df.groupBy(*gb, col).agg(F.count(F.lit(1)).alias("freq"))
-    w = Window.partitionBy(*gb).orderBy(F.desc("freq"), F.asc(col))
-    ranked = counted.withColumn("_rn", F.row_number().over(w))
-    uniq = df.groupBy(*gb).agg(F.countDistinct(col).alias("unique"))
-    top = ranked.filter(F.col("_rn") == 1).select(
-        *gb, F.col(col).alias("top"), "freq"
-    )
-    if gb:
-        return uniq.join(top, gb)
-    return uniq.crossJoin(top)
-
-
 def type_vote(df: DataFrame, col: str) -> DataFrame:
     """Reference type inference (simple_engine.go:262-270): 'int' iff every
     non-null value parses as int; 'float' if all parse numeric with at

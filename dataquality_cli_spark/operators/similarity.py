@@ -484,29 +484,18 @@ def lsh_bucket_col(vec: Column, planes: np.ndarray) -> Column:
     return bucket
 
 
-def _table_buckets(vec: Column, planes: np.ndarray, n_tables: int) -> Column:
-    """Array of per-table bucket ids (planes split evenly over tables)
-    as pure column expressions — retained as the SEMANTICS TWIN of the
-    Arrow kernel below (parity pytest-pinned) and the shape the
-    ann_lsh_buckets oracle checks through lsh_bucket_col."""
-    per = len(planes) // n_tables
-    return F.array(*[
-        lsh_bucket_col(vec, planes[t * per : (t + 1) * per]) for t in range(n_tables)
-    ])
-
-
 def _table_buckets_udf(planes: np.ndarray, n_tables: int):
     """r7: the serving-path bucket assigner — ONE numpy matmul per
     Arrow batch instead of the per-plane interpreted dot_col fold
     (n_planes x dim x rows lambda evaluations and a 4k-literal
     expression tree at 64 planes; measured ann_lsh_topk 5.8s -> 1.4s
-    at sf0.1). Bit/bucket layout identical to :func:`_table_buckets`:
-    bit j of table t is sign(dot(vec, plane[t*per+j])) > 0. Float
-    summation order differs from the left-folded expression (BLAS vs
-    sequential), which can only matter for a dot product within ~1e-15
-    of exactly 0 — knife-edge bucket boundaries no REAL vector
-    occupies; the exact-oracle routing query (ann_lsh_buckets) keeps
-    the expression path. A NULL vector maps to bucket 0 in every
+    at sf0.1). Planes split evenly over tables: bit j of table t is
+    dot(vec, plane[t*per+j]) > 0, the :func:`lsh_bucket_col` layout.
+    Float summation order differs from that left-folded expression
+    (BLAS vs sequential), which can only matter for a dot product
+    within ~1e-15 of exactly 0 — knife-edge bucket boundaries no REAL
+    vector occupies; the exact-oracle routing query (ann_lsh_buckets)
+    keeps the expression path. A NULL vector maps to bucket 0 in every
     table, matching when(NULL > 0, ...) semantics."""
     from pyspark.sql.functions import pandas_udf
 
@@ -1047,16 +1036,17 @@ def pca_transform(df: DataFrame, model: dict,
                   vec_col: str = "embedding",
                   out_col: str = "projection") -> DataFrame:
     """Project embeddings onto the fitted components: one Arrow batch
-    matmul against the broadcast (k x dim) matrix — same shape as
-    kmeans_assign. Output is array<double> of length k."""
+    matmul against the (k x dim) matrix — same shape as kmeans_assign.
+    The mean and components are captured in the UDF closure and ship
+    with the task command, so no SparkContext broadcast outlives the
+    plan. Output is array<double> of length k."""
     from pyspark.sql.functions import pandas_udf
 
-    bc = df.sparkSession.sparkContext.broadcast(
-        (np.asarray(model["mean"]), np.asarray(model["components"])))
+    mu = np.asarray(model["mean"])
+    comps = np.asarray(model["components"])
 
     @pandas_udf("array<double>")
     def proj(vecs: pd.Series) -> pd.Series:
-        mu, comps = bc.value
         x = np.array(vecs.tolist(), dtype=np.float64)
         if x.size == 0:
             return pd.Series([], dtype=object)

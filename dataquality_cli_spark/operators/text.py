@@ -15,8 +15,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # single space tokenizer — the documents fixture is space-separated;
-# (the pipeline's code rules use the richer TOKEN_SEP_RE)
+# (the pipeline's code rules use textmetrics' richer whitespace class)
 TOKEN_SEP = " "
+
+ALNUM_CHARS = (
+    "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789"
+)
 
 # tiny English stopword list for the heuristic language guess (public
 # knowledge; fixed + sorted so both engines agree)
@@ -26,6 +30,13 @@ EN_STOPWORD_RATIO_MIN = 0.12
 
 def tokens_col(text: Column) -> Column:
     return F.split(text, TOKEN_SEP, -1)
+
+
+def alnum_count(content: Column) -> Column:
+    """# of [A-Za-z0-9] chars via single-pass translate-delete.
+    regexp_replace('[^A-Za-z0-9]','') computes the same thing ~20x
+    slower (per-char match + rebuild) — measured 10s vs 0.5s on 90 MB."""
+    return F.length(content) - F.length(F.translate(content, ALNUM_CHARS, ""))
 
 
 def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -83,8 +94,6 @@ def bpe_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def alnum_fraction(df: DataFrame, text_col: str = "text") -> DataFrame:
-    from ..functions.rules import alnum_count
-
     n = F.length(F.col(text_col))
     alnum = alnum_count(F.col(text_col))
     return df.select(
@@ -115,7 +124,6 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Composite quality score in [0,1]: length band + token diversity +
     alnum fraction (recast of the reference quality grade,
     cmd/describe.go:393-401, as a continuous score)."""
-    from ..functions.rules import alnum_count
     from .util import spread
 
     # same interpreted-HOF-off-one-file reasoning as doc_quality_verdict
@@ -136,7 +144,6 @@ def doc_quality_verdict(df: DataFrame, text_col: str = "text") -> DataFrame:
     built-ins so it has an exact DuckDB oracle. Thresholds in config."""
     from .. import config as C
 
-    from ..functions.rules import alnum_count
     from .util import spread
 
     # the token HOFs below (split/array_distinct/transform) run
@@ -721,7 +728,7 @@ def entropy_signals(df: DataFrame, text_col: str = "text",
                     min_len: int = 20,
                     high_bits: float = 4.0) -> DataFrame:
     """High-entropy token screen — the detect-secrets-style complement
-    to the pattern scrub (functions/scrub.py names known key SHAPES;
+    to the pattern scrub (config.SCRUB_RULES names known key SHAPES;
     Shannon entropy catches the random blobs no pattern names; public
     method, recomputed from the definition). Candidate tokens are
     whitespace-delimited runs of length >= ``min_len`` over the
@@ -981,9 +988,8 @@ def complexity_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     - n_branch_points: decision keywords (word-bounded) + short-circuit
       / ternary operators; branch_density: per line
-    - max_paren_depth / max_brace_depth: running-nesting maxima via a
-      single aggregate fold over characters (minified or generated
-      code shows extreme depth)
+    - max_paren_depth / max_brace_depth: running-nesting maxima over
+      characters (minified or generated code shows extreme depth)
 
     One scan, no shuffle; exact DuckDB oracle (entry query
     doc_complexity). The depth maxima run as a numpy cumsum kernel over
@@ -991,9 +997,8 @@ def complexity_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     interpreted per-char struct-fold allocated ~2 chars' worth of
     structs per byte, twice — SURVEY.md §7 measured that expression
     shape allocation-bound; brackets are ASCII so byte-level cumsum is
-    exactly the per-char fold, parity pytest-pinned against the
-    retained :func:`_depth_fold_expr` twin); the branch counts stay
-    JVM regexp codegen."""
+    exactly the per-char fold, parity pytest-pinned against the DuckDB
+    doc_complexity query); the branch counts stay JVM regexp codegen."""
     from pyspark.sql.functions import pandas_udf
 
     from .util import spread
@@ -1040,29 +1045,6 @@ def complexity_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.col("_d.max_paren").alias("max_paren_depth"),
         F.col("_d.max_brace").alias("max_brace_depth"),
     )
-
-
-def _depth_fold_expr(text: Column, open_ch: str, close_ch: str) -> Column:
-    """The original interpreted per-char running-depth fold — kept as
-    the semantics twin the Arrow kernel in :func:`complexity_profile`
-    is parity-tested against (and the shape the DuckDB oracle mirrors).
-    Per-char split MUST be '(?!\\z)' — plain '' drops the last char
-    (gotcha 31) and '(?!$)' merges the char before a trailing newline
-    with it (Java $ matches BEFORE a final line terminator),
-    undercounting a bracket at EOL."""
-    chars = F.split(text, r"(?!\z)", -1)
-    acc = F.aggregate(
-        chars,
-        F.struct(F.lit(0).alias("cur"), F.lit(0).alias("mx")),
-        lambda a, c: F.struct(
-            (a.cur + F.when(c == open_ch, 1)
-             .when(c == close_ch, -1).otherwise(0)).alias("cur"),
-            F.greatest(
-                a.mx,
-                a.cur + F.when(c == open_ch, 1)
-                .when(c == close_ch, -1).otherwise(0)).alias("mx")),
-    )
-    return acc.mx.cast("long")
 
 
 def function_neardup_pairs(df: DataFrame, id_col: str = "doc_id",

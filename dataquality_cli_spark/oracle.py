@@ -1,8 +1,9 @@
 """Pure-Python single-process reference implementation of the pipeline
 rules (FIXTURES.md §1 oracle). Shares ONLY constants (config.py) and the
 trained model objects with the Spark side; all heuristic/scrub logic here
-is independent straight-line Python over strings — no Spark, no numpy
-array expressions — so it cross-checks the Column-expression semantics.
+is independent straight-line Python over strings — no Spark, no numpy,
+no shared helpers — so it cross-checks the pipeline's batch kernels
+(functions/textmetrics.py: metrics_one, scrub_one) written separately.
 
 pytest compares Spark verdicts vs these labels at F1 >= 0.99 and checks
 the sha256(content) invariant for kept-unmodified rows (north rule).

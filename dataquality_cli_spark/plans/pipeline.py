@@ -5,9 +5,10 @@ scan + map; the only shuffles are the optional salt repartition and the
 metrics aggregation, both bounded).
 
 Plan shape (``.explain``): parquet scan (pruned to the 5 input cols) ->
-WholeStageCodegen(heuristic exprs + scrub) -> ArrowEvalPython (fused
-langid+ppl UDF) -> project. Cheap heuristic failures short-circuit the
-model stages at the semantic level via drop-reason precedence
+salt Exchange -> ArrowEvalPython (ONE fused UDF: langid + ppl +
+heuristic metrics + scrub, functions/textmetrics.py) -> project
+(verdict CASE + sha2). Cheap heuristic failures short-circuit the model
+stages at the semantic level via drop-reason precedence
 (config.DROP_REASON_ORDER).
 
 Checkpoint/resume: verdicts are written partitioned by ``part_id =
@@ -26,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import config as C
-from ..functions import rules, scrub
 from ..functions.udfs import broadcast_models, with_full_scores
 
 INPUT_COLS = ("repo", "path", "commit", "lang", "content")
@@ -36,10 +36,19 @@ def apply_verdict(scored: DataFrame) -> DataFrame:
     """drop_reason = first failing rule in pinned precedence order; scrub
     output gated on keep. Every reference here is a cheap struct-field
     extraction of the fused-UDF output (the ArrowEvalPython node is a
-    CollapseProject barrier, so nothing heavy is ever recomputed)."""
-    fails = rules.heuristic_failures()
-    fails["perplexity"] = F.col("ppl") > C.PPL_MAX
-    fails["langid"] = F.col("langid_pred") == C.LANGID_PROSE_CLASS
+    CollapseProject barrier, so nothing heavy is ever recomputed).
+    Thresholds come from config, shared with oracle.py."""
+    fails = {
+        "blank_ratio": F.col("blank_ratio") > C.BLANK_RATIO_MAX,
+        "line_length": (F.col("max_line_len") > C.MAX_LINE_LEN)
+        | (F.col("mean_line_len") > C.MEAN_LINE_LEN_MAX),
+        "alnum": F.col("alnum_fraction") < C.ALNUM_FRACTION_MIN,
+        "dup_lines": (F.col("dup_line_ratio") > C.DUP_LINE_RATIO_MAX)
+        & (F.col("n_nonblank_lines") >= C.DUP_LINE_MIN_LINES),
+        "max_token": F.col("max_token_len") > C.MAX_TOKEN_LEN,
+        "perplexity": F.col("ppl") > C.PPL_MAX,
+        "langid": F.col("langid_pred") == C.LANGID_PROSE_CLASS,
+    }
 
     reason = F.lit(None).cast("string")
     for r in reversed(C.DROP_REASON_ORDER):
@@ -47,7 +56,10 @@ def apply_verdict(scored: DataFrame) -> DataFrame:
     out = scored.withColumn("drop_reason", reason).withColumn(
         "keep", F.col("drop_reason").isNull()
     )
-    out = out.withColumn("total_scrub_hits", scrub.total_hits_col())
+    total_hits = F.lit(0).cast("long")
+    for name, _p, _r in C.SCRUB_RULES:
+        total_hits = total_hits + F.col(f"hits_{name}")
+    out = out.withColumn("total_scrub_hits", total_hits)
     out = (
         out.withColumn(
             "scrubbed_content",
@@ -115,13 +127,21 @@ def completed_parts(spark: SparkSession, out_dir: str) -> set[int]:
     FileSystem of its path, so a fresh dir logs no failed read; the read
     itself stays strict: a schema-drifted/corrupt manifest raises loudly
     rather than being misread as 'not written yet' (which would silently
-    reprocess every partition and double-append metrics)."""
+    reprocess every partition and double-append metrics). It reads the
+    manifest's part files, listed through the same FileSystem, rather
+    than the directory: Spark treats a root whose name starts with '_'
+    as hidden and warns that it ignored it (and a glob path logs a
+    failed metadata-dir probe)."""
     manifest = os.path.join(out_dir, "_manifest")
     sc = spark.sparkContext
-    path = sc._jvm.org.apache.hadoop.fs.Path(manifest)
-    if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    path = Path(manifest)
+    fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+    if not fs.exists(path):
         return set()
-    mdf = spark.read.parquet(manifest)
+    files = [st.getPath().toString()
+             for st in fs.globStatus(Path(path, "*.parquet"))]
+    mdf = spark.read.parquet(*files)
     return {r.part_id for r in mdf.select("part_id").distinct().collect()}
 
 

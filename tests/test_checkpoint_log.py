@@ -1,5 +1,7 @@
-"""The first checkpointed run into a new output dir logs no failed read of
-the resume manifest that does not exist yet."""
+"""A checkpointed run logs nothing about the resume manifest: neither the
+first run into a new output dir (no failed read of a manifest that does
+not exist yet) nor a rerun into the same dir (no hidden-path warning for
+the underscore-named manifest it reads)."""
 
 from __future__ import annotations
 
@@ -22,16 +24,19 @@ df = spark.createDataFrame(
     "repo string, path string, commit string, lang string, content string")
 P.run_with_checkpoint(spark, df, {out!r}, n_parts=2)
 print("wrote", sorted(os.listdir({out!r})))
+P.run_with_checkpoint(spark, df, {out!r}, n_parts=2)
+print("resumed", sorted(P.completed_parts(spark, {out!r})))
 spark.stop()
 """
 
 
 def test_fresh_checkpoint_dir_logs_no_manifest_trace(tmp_path, capfd):
-    """The JVM writes its log to the stderr it inherited, so the run goes
-    through a fresh interpreter (and JVM) started under capfd. (A later
-    read of an existing manifest still logs Spark's one-line "All paths
-    were ignored" warning for the underscore-named dir; that is not
-    checked here.)"""
+    """The JVM writes its log to the stderr it inherited, so the runs go
+    through a fresh interpreter (and JVM) started under capfd: a first
+    run, then a rerun into the same dir that reads the written manifest
+    (every part done, so it processes nothing) and would log Spark's
+    "All paths were ignored" warning if it read the '_manifest' dir
+    itself rather than its part files."""
     out = str(tmp_path / "out")
     proc = subprocess.run(
         [sys.executable, "-c", FRESH_RUN.format(repo=REPO, out=out)],
@@ -39,4 +44,6 @@ def test_fresh_checkpoint_dir_logs_no_manifest_trace(tmp_path, capfd):
     stdout, stderr = capfd.readouterr()
     assert proc.returncode == 0, stderr[-2000:]
     assert "wrote ['_manifest', 'data']" in stdout
+    assert "resumed [0, 1]" in stdout
+    assert "All paths were ignored" not in stderr, stderr[-2000:]
     assert "_manifest" not in stderr, stderr[-2000:]

@@ -4,6 +4,8 @@ profiling helpers, multimodal plumbing."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -632,29 +634,6 @@ def test_video_scene_cuts_planted(spark):
     assert all(got[i].luma_total == frame_sum[i] for i in range(24))
 
 
-def test_fast_minhash_lsh_properties(spark):
-    """Vectorized-numpy MinHash variant: exact duplicates always pair;
-    pairs strongly overlap the portable md5-LSH candidates."""
-    from dataquality_cli_spark.operators import dedup
-
-    base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    # append exact copies of docs 0..9 under new ids -> guaranteed dups
-    n = base.count()
-    copies = base.filter(F.col("doc_id") < 10).select(
-        (F.col("doc_id") + n).alias("doc_id"), "text",
-        *[c for c in base.columns if c not in ("doc_id", "text")])
-    docs = base.unionByName(copies.select(base.columns))
-    pairs = set(map(tuple, dedup.fast_lsh_candidate_pairs(docs).collect()))
-    expected_dups = {(float(i), float(i + n)) for i in range(10)}
-    got_pairs = {(float(a), float(b)) for a, b in pairs}
-    # exact dups (identical text) share every band -> always candidates
-    assert expected_dups <= got_pairs, expected_dups - got_pairs
-    md5_pairs = set(map(tuple, dedup.lsh_candidate_pairs(docs).collect()))
-    # steeper banding (4x4) is a subset-leaning filter of the loose 2x3
-    # config on this corpus: most fast pairs are also md5 candidates
-    assert len(pairs & md5_pairs) / max(len(pairs), 1) > 0.5
-
-
 def test_neardup_clusters_chain_and_triangle(spark):
     from dataquality_cli_spark.operators.dedup import neardup_clusters
 
@@ -906,7 +885,6 @@ def test_capped_band_path_has_no_window_or_sort(spark, docs):
 
     for out in (
         dedup.lsh_candidate_pairs(docs, max_bucket_size=64),
-        dedup.fast_lsh_candidate_pairs(docs, max_bucket_size=64),
         neardup_pairs_lsh(
             spark.read.parquet(f"{SF}/embeddings.parquet"),
             max_bucket_size=64),
@@ -2724,7 +2702,7 @@ def test_boilerplate_lines_census_and_removal(spark):
     assert out[4].n_lines_removed == 0
     plan = (D.remove_boilerplate_lines(docs, min_docs=3)
             ._jdf.queryExecution().executedPlan().toString())
-    # r7: the census rides a SparkContext broadcast into a mapInPandas
+    # the census rides the kernel's closure into a mapInPandas
     # set-lookup kernel — the rewrite plan has NO join and no shuffle
     # of document bodies at all
     assert "Join" not in plan
@@ -2757,14 +2735,41 @@ def test_remove_boilerplate_parity_edges(spark):
     assert out[4].text is None and out[4].n_lines_removed is None
 
 
+def test_plan_artifacts_leave_no_broadcast_file(spark, emb):
+    """The small read-only artifacts of remove_boilerplate_lines (census
+    set), bpe_tokenize (merge pairs) and pca_transform (mean and
+    components) ride the UDF closure, not a SparkContext broadcast:
+    every sc.broadcast writes one file to sc._temp_dir that only
+    destroy() unlinks, so building and collecting each leaves none."""
+    from dataquality_cli_spark.operators import bpe, similarity
+    from dataquality_cli_spark.operators import dedup as D
+
+    header = "// Copyright Corp"
+    docs = spark.createDataFrame(
+        [(i, f"{header}\nlow lower newest widest {i}\n") for i in range(4)],
+        "doc_id long, text string")
+    merges = bpe.learn_bpe_merges(docs, n_merges=5)
+    model = similarity.pca_fit(emb, k=3)
+    temp_dir = spark.sparkContext._temp_dir
+    for build in (lambda: D.remove_boilerplate_lines(docs, min_docs=3),
+                  lambda: bpe.bpe_tokenize(docs, merges),
+                  lambda: similarity.pca_transform(emb, model)):
+        before = set(os.listdir(temp_dir))
+        assert build().collect()
+        assert set(os.listdir(temp_dir)) == before
+
+
 def test_minhash_mapinpandas_matches_expression_twin(spark):
-    """r7 optimization parity pin: minhash_signatures moved from the
-    per-shingle JVM md5 expression path to a hashlib mapInPandas kernel.
-    The column-expression builder (minhash_signature — still the DuckDB
-    oracle's semantics source) must agree byte-for-byte, including the
-    edge shapes: empty text, shorter-than-k text, non-ASCII codepoints
-    (Python slicing and Spark substring both count codepoints), and
-    NULL text (NULL signature)."""
+    """minhash_signatures' hashlib mapInPandas kernel must equal the
+    DuckDB oracle query (dedup_minhash_signatures: salted md5 minima over
+    list_transform'ed shingles) byte-for-byte, including the edge shapes:
+    empty text, shorter-than-k text, non-ASCII codepoints (Python slicing
+    and DuckDB substr both count codepoints), and NULL text (NULL
+    signature)."""
+    import duckdb
+    import pandas as pd
+
+    from __spark_entry__ import oracle_sql
     from dataquality_cli_spark.operators import dedup as D
 
     rows = [
@@ -2777,15 +2782,14 @@ def test_minhash_mapinpandas_matches_expression_twin(spark):
         (6, None),
         (7, "a" * 100),                   # degenerate: one distinct shingle
     ]
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = sorted(con.sql(oracle_sql()["dedup_minhash_signatures"]).fetchall())
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    fast = {r.doc_id: r for r in D.minhash_signatures(df).collect()}
-    slow = {r.doc_id: r for r in df.select(
-        "doc_id", *D.minhash_signature(F.col("text"))).collect()}
-    assert set(fast) == set(slow)
-    for did in slow:
-        for j in range(D.N_HASHES):
-            assert fast[did][f"mh{j}"] == slow[did][f"mh{j}"], (
-                did, j, fast[did], slow[did])
+    got = sorted(tuple(r) for r in D.minhash_signatures(df).collect())
+    assert [r[0] for r in want] == [r[0] for r in rows]
+    assert got == want
+    assert got[5][1:] == (None,) * D.N_HASHES
 
 
 def test_kmeans_fused_iteration_matches_numpy_lloyd(spark):
@@ -2828,12 +2832,16 @@ def test_kmeans_fused_iteration_matches_numpy_lloyd(spark):
 
 
 def test_complexity_depth_kernel_matches_hof_twin(spark):
-    """r7 optimization parity pin: complexity_profile's depth maxima
-    moved to a numpy byte-cumsum Arrow kernel; the retained interpreted
-    HOF fold (_depth_fold_expr — the DuckDB oracle's shape) must agree
-    exactly, including unicode payloads (multi-byte chars never match
-    ASCII brackets), unbalanced closers (max clamps at 0), trailing
-    newlines (the (?!\\z) split edge), and empty text."""
+    """complexity_profile's numpy byte-cumsum depth kernel (and its JVM
+    branch counts) must equal the DuckDB oracle query (doc_complexity: a
+    per-char running-depth window) exactly, including unicode payloads
+    (multi-byte chars never match ASCII brackets), unbalanced closers
+    (max clamps at 0), a bracket right before a trailing newline, and
+    empty text."""
+    import duckdb
+    import pandas as pd
+
+    from __spark_entry__ import oracle_sql
     from dataquality_cli_spark.operators import text as T
 
     rows = [
@@ -2846,43 +2854,47 @@ def test_complexity_depth_kernel_matches_hof_twin(spark):
         (7, "(\n"),          # bracket right before trailing newline
         (8, "((((((((((deep))))))))))"),
     ]
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    # the oracle unions its planted code docs (ids 91001+) into the input
+    want = sorted(r for r in con.sql(oracle_sql()["doc_complexity"]).fetchall()
+                  if r[0] <= len(rows))
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in T.complexity_profile(df).collect()}
-    want = {r.doc_id: r for r in df.select(
-        "doc_id",
-        T._depth_fold_expr(F.col("text"), "(", ")").alias("p"),
-        T._depth_fold_expr(F.col("text"), "{", "}").alias("b")).collect()}
-    for did in want:
-        assert got[did].max_paren_depth == want[did].p, (did, got[did])
-        assert got[did].max_brace_depth == want[did].b, (did, got[did])
+    got = sorted(tuple(r) for r in T.complexity_profile(df).collect())
+    assert len(want) == len(rows)
+    assert got == want
+    depths = {r[0]: r[3:] for r in got}
+    assert depths[8] == (10, 0) and depths[2] == (0, 0) and depths[5] == (1, 2)
 
 
 def test_table_buckets_udf_matches_expression_twin(spark, emb):
-    """r7 optimization parity pin: the serving paths' Arrow bucket
-    kernel (_table_buckets_udf) must produce the same per-table bucket
-    ids as the retained column-expression twin (_table_buckets) on the
-    real embeddings fixture — same bit layout, same strict sign rule."""
+    """The serving paths' Arrow bucket kernel (_table_buckets_udf) must
+    produce the per-table bucket ids of a per-plane numpy reference on
+    the real embeddings fixture: planes split evenly over tables, bit j
+    of table t set iff dot(vec, plane[t*per+j]) > 0."""
     import numpy as np
 
     from dataquality_cli_spark.operators import similarity as S
 
+    n_tables = 8
     planes = S.hyperplanes(64, 32, seed=41)
-    got = {r.vec_id: r.b for r in emb.select(
-        "vec_id",
-        S._table_buckets_udf(planes, 8)(F.col("embedding")).alias("b"))
-        .collect()}
-    want = {r.vec_id: r.b for r in emb.select(
-        "vec_id",
-        S._table_buckets(F.col("embedding"), planes, 8).alias("b"))
-        .collect()}
-    assert got == want
+    rows = emb.select("vec_id", "embedding",
+                      S._table_buckets_udf(planes, n_tables)(F.col("embedding")).alias("b")
+                      ).collect()
+    per = len(planes) // n_tables
+    assert rows
+    for r in rows:
+        bits = [float(np.dot(r.embedding, plane)) > 0 for plane in planes]
+        ref = [sum(int(bits[t * per + j]) << j for j in range(per))
+               for t in range(n_tables)]
+        assert r.b == ref, (r.vec_id, r.b, ref)
 
 
 def test_table_buckets_udf_knife_edge(spark):
     """Vectors whose dot product with a plane is exactly 0.0 or +-1e-12
     (products by +-1 and 0 are exact, so every summation order gives the
-    same value): the Arrow kernel, the column-expression twin and a numpy
-    reference agree on every bucket id, with 0.0 mapped to bit 0."""
+    same value): the Arrow kernel and a per-plane numpy reference agree
+    on every bucket id, with 0.0 mapped to bit 0."""
     import numpy as np
 
     from dataquality_cli_spark.operators import similarity as S
@@ -2904,15 +2916,12 @@ def test_table_buckets_udf_knife_edge(spark):
     got = {r.vec_id: r.b for r in df.select(
         "vec_id", S._table_buckets_udf(planes, n_tables)(F.col("embedding")).alias("b"))
         .collect()}
-    twin = {r.vec_id: r.b for r in df.select(
-        "vec_id", S._table_buckets(F.col("embedding"), planes, n_tables).alias("b"))
-        .collect()}
     per = len(planes) // n_tables
     ref = {}
     for i, v in enumerate(vecs):
         bits = [float(np.dot(v, plane)) > 0 for plane in planes]
         ref[i] = [sum(int(bits[t * per + j]) << j for j in range(per)) for t in range(n_tables)]
-    assert got == twin == ref
+    assert got == ref
     # the planted edges: exact 0.0 is bit 0, +1e-12 is bit 1
     assert [ref[i][0] & 1 for i in range(6)] == [0, 1, 0, 0, 1, 0]
     assert [(ref[i][1] >> 1) & 1 for i in range(6)] == [0, 1, 0, 0, 0, 0]

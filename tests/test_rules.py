@@ -1,16 +1,17 @@
-"""Unit tests: each Column-expression rule matches the oracle's pure-
-Python metric on crafted edge-case strings (hypothesis fuzz included)."""
+"""Unit tests: the pipeline's heuristic metric kernel
+(``textmetrics.metrics_one``, run inside the fused scoring UDF) matches
+the oracle's independent pure-Python metrics on crafted edge-case
+strings (hypothesis fuzz included). Both sides are plain Python, so no
+Spark job runs per example."""
 
 from __future__ import annotations
 
 import math
 
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
-from dataquality_cli_spark.functions import rules
+from dataquality_cli_spark.functions.textmetrics import METRIC_FIELDS, metrics_one
 from dataquality_cli_spark.oracle import _heuristic_metrics
 
 EDGE_CASES = [
@@ -27,6 +28,7 @@ EDGE_CASES = [
     "\n",
     "a b\r\nc d\r\n",  # CR handled as blank-char
     "!@#$%^&*()" * 10,
+    "",  # NULL content reaches the kernel as '' (fillna)
 ]
 
 METRIC_KEYS = [
@@ -35,35 +37,25 @@ METRIC_KEYS = [
 ]
 
 
-def _spark_metrics(spark, texts):
-    df = spark.createDataFrame([(t,) for t in texts], "content string")
-    mets = rules.rule_metrics(F.col("content"))
-    out = df.select("content", *(e.alias(n) for n, e in mets.items())).collect()
-    return {r.content: r for r in out}
-
-
-def test_rules_match_oracle_on_edge_cases(spark):
-    got = _spark_metrics(spark, EDGE_CASES)
-    for t in EDGE_CASES:
-        exp = _heuristic_metrics(t)
-        row = got[t]
-        for k in METRIC_KEYS:
-            g, e = getattr(row, k), exp[k]
-            if isinstance(e, float):
-                assert math.isclose(g, e, rel_tol=1e-12, abs_tol=1e-12), (k, repr(t), g, e)
-            else:
-                assert g == e, (k, repr(t), g, e)
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.text(alphabet=st.characters(codec="utf-8", exclude_characters="\x00"),
-               min_size=1, max_size=400))
-def test_rules_match_oracle_fuzz(spark, text):
-    got = _spark_metrics(spark, [text])[text]
+def _assert_matches_oracle(text):
+    got = dict(zip(METRIC_FIELDS, metrics_one(text)))
     exp = _heuristic_metrics(text)
+    assert set(got) == set(METRIC_KEYS)
     for k in METRIC_KEYS:
-        g, e = getattr(got, k), exp[k]
+        g, e = got[k], exp[k]
         if isinstance(e, float):
             assert math.isclose(g, e, rel_tol=1e-12, abs_tol=1e-12), (k, repr(text), g, e)
         else:
             assert g == e, (k, repr(text), g, e)
+
+
+def test_rules_match_oracle_on_edge_cases():
+    for t in EDGE_CASES:
+        _assert_matches_oracle(t)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.text(alphabet=st.characters(codec="utf-8", exclude_characters="\x00"),
+               min_size=1, max_size=400))
+def test_rules_match_oracle_fuzz(text):
+    _assert_matches_oracle(text)

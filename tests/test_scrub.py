@@ -1,12 +1,13 @@
 """Scrub pass properties: pattern coverage, idempotence (scrub∘scrub =
-scrub), Spark/oracle parity, hit-count consistency."""
+scrub), parity of the pipeline's scrub kernel (``textmetrics.scrub_one``,
+run inside the fused scoring UDF) with the oracle, hit-count
+consistency."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
+from dataquality_cli_spark import config as C
 from dataquality_cli_spark import oracle
-from dataquality_cli_spark.functions import scrub as sc
+from dataquality_cli_spark.functions.textmetrics import scrub_one
 
 SAMPLES = {
     "email": ("contact me at dev.lead+ci@example-corp.io today", "<EMAIL>"),
@@ -22,34 +23,20 @@ SAMPLES = {
 }
 
 
-def _spark_scrub(spark, texts):
-    df = spark.createDataFrame([(t,) for t in texts], "content string")
-    hits = sc.scrub_hit_cols(F.col("content"))
-    out = (
-        df.select("content", *(e.alias(n) for n, e in hits.items()))
-        .withColumn("total", sc.total_hits_col())
-        .withColumn("scrubbed", sc.scrubbed_col(F.col("content")))
-    )
-    return {r.content: r for r in out.collect()}
-
-
-def test_each_pattern_fires_and_replaces(spark):
-    texts = [t for t, _ in SAMPLES.values()]
-    got = _spark_scrub(spark, texts)
+def test_each_pattern_fires_and_replaces():
     for name, (text, token) in SAMPLES.items():
-        row = got[text]
-        assert token in row.scrubbed, (name, row.scrubbed)
-        assert row.total >= 1, name
+        scrubbed, hits = scrub_one(text)
+        assert token in scrubbed, (name, scrubbed)
+        assert dict(zip((n for n, _p, _r in C.SCRUB_RULES), hits))[name] >= 1, name
 
 
-def test_spark_matches_oracle(spark):
-    texts = [t for t, _ in SAMPLES.values()] + ["no pii here at all"]
-    got = _spark_scrub(spark, texts)
+def test_spark_matches_oracle():
+    texts = [t for t, _ in SAMPLES.values()] + ["no pii here at all", ""]
     for t in texts:
         o_scrubbed, o_hits = oracle.scrub(t)
-        row = got[t]
-        assert row.scrubbed == o_scrubbed, (repr(t), row.scrubbed, o_scrubbed)
-        assert row.total == sum(o_hits.values())
+        scrubbed, hits = scrub_one(t)
+        assert scrubbed == o_scrubbed, (repr(t), scrubbed, o_scrubbed)
+        assert hits == tuple(o_hits.values()), (repr(t), hits, o_hits)
 
 
 def test_scrub_idempotent():
@@ -71,11 +58,8 @@ def test_toxicity_gate_unicode_casefold_parity():
     re's Unicode casefolding matches 'BELGİUM' (U+0130) and 'ſhazbot'
     (U+017F) where str.lower() substring checks do not — non-ASCII text
     must bypass the gate and run the full regex."""
-    from dataquality_cli_spark.functions.textmetrics import scrub_one
-    from dataquality_cli_spark.oracle import scrub as oracle_scrub
-
     for t in ("visit BELGİUM now", "ſhazbot said the robot",
               "plain FRAK here", "no toxicity at all", "café and belgium"):
-        o_out, o_hits = oracle_scrub(t)
+        o_out, o_hits = oracle.scrub(t)
         s_out, s_hits = scrub_one(t)
         assert o_out == s_out and tuple(o_hits.values()) == s_hits, t
