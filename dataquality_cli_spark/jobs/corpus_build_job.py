@@ -28,22 +28,18 @@ default-on bucket cap, a broadcast join for decontamination, and a
 shuffle-free split+pack — no stage introduces a cross join or unbounded
 state (see SCALE.md).
 
-Two runners share the stage logic:
-
-- ``build_corpus``: in-memory composition (persist/unpersist
-  discipline), returns live DataFrames — the library/testing surface.
-- ``build_corpus_resumable``: materializes every stage boundary to
-  parquet and appends a manifest row AFTER the data lands (the same
-  manifest-after-data ordering as plans/pipeline.run_with_checkpoint);
-  a rerun resumes from the last complete stage, so a mid-job kill never
-  recomputes the expensive filter/dedup stages and never double-writes.
-  This is the spark-submit deployment path (north rule: idempotent
-  resume for the flagship chain, not just the filter stage).
+One runner, ``build_corpus_resumable``, drives the chain: the stages
+after the filter are one table of (stage, metrics key, transform), and
+every stage boundary is materialized to parquet with a manifest row
+appended AFTER the data lands (the same manifest-after-data ordering as
+plans/pipeline.run_with_checkpoint). A rerun resumes from the last
+complete stage, so a mid-job kill never recomputes the expensive
+filter/dedup stages and never double-writes. ``main()`` is its
+spark-submit entrypoint (north rule: idempotent resume for the flagship
+chain, not just the filter stage).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -121,44 +117,29 @@ def _exact_stage(kept: DataFrame) -> DataFrame:
     return kept.join(survivors, "doc_id")
 
 
-def _neardup_stage(exact: DataFrame, threshold: float,
-                   keep: str = "quality") -> DataFrame:
-    """Near-dup dedup with quality-aware representative selection.
-
-    ``keep='quality'`` (default, the production choice): keep the
-    BEST-SCORING member of each near-dup cluster via
+def _neardup_stage(exact: DataFrame, threshold: float) -> DataFrame:
+    """Near-dup dedup with quality-aware representative selection: keep
+    the BEST-SCORING member of each near-dup cluster via
     ``dedup.select_representatives`` over ``text.quality_score`` —
     a mirror of a crawled page should lose to the cleaner original, not
     to whichever got the lower hash. Scores are computed only for
     CLUSTERED docs (a small minority of the corpus after exact dedup),
     so the scoring pass is bounded by the near-dup rate, not corpus
     size. Tie-break is lowest doc_id, so a score-flat cluster keeps
-    exactly the min-id member — byte-identical to ``keep='min_id'``
-    when scores tie (pytest-pinned for the resumable path).
-
-    ``keep='min_id'``: the arbitrary canonical label (cluster_id),
-    kept for reproducing pre-r4 builds."""
+    exactly its min-id member."""
     from dataquality_cli_spark.operators import dedup
+    from dataquality_cli_spark.operators.text import quality_score
 
     pairs = dedup.lsh_verified_pairs(exact, threshold=threshold)
     clusters = dedup.neardup_clusters(pairs)
-    if keep == "min_id":
-        losers = clusters.filter(
-            F.col("doc_id") != F.col("cluster_id")).select("doc_id")
-    elif keep == "quality":
-        from dataquality_cli_spark.operators.text import quality_score
-
-        members = exact.join(clusters.select("doc_id"), "doc_id")
-        scores = quality_score(members).select("doc_id", "quality_score")
-        reps = dedup.select_representatives(clusters, scores)
-        losers = (
-            clusters.join(reps.select("cluster_id", "rep_id"), "cluster_id")
-            .filter(F.col("doc_id") != F.col("rep_id"))
-            .select("doc_id")
-        )
-    else:
-        raise ValueError(f"neardup keep must be 'quality' or 'min_id', "
-                         f"got {keep!r}")
+    members = exact.join(clusters.select("doc_id"), "doc_id")
+    scores = quality_score(members).select("doc_id", "quality_score")
+    reps = dedup.select_representatives(clusters, scores)
+    losers = (
+        clusters.join(reps.select("cluster_id", "rep_id"), "cluster_id")
+        .filter(F.col("doc_id") != F.col("rep_id"))
+        .select("doc_id")
+    )
     return exact.join(losers, "doc_id", "left_anti")
 
 
@@ -343,189 +324,32 @@ def _with_token_counts(df: DataFrame, token_kind: str) -> DataFrame:
         "n_tokens", token_count_col(F.col("text"), token_kind).cast("long"))
 
 
-def build_corpus(
-    spark: SparkSession,
-    df: DataFrame,
-    benchmark: DataFrame | None = None,
-    neardup_threshold: float = 0.7,
-    val_fraction: float = 0.05,
-    pack_budget: int = 2048,
-    contamination_min_hits: int = 3,
-    token_kind: str = "bpe",
-    neardup_keep: str = "quality",
-    bc=None,
-    semantic_threshold: float | None = None,
-    semantic_pca_dim: int | None = None,
-    bloom_artifact: str | None = None,
-    prior_kept: str | None = None,
-    cross_doc_min_docs: int | None = None,
-    drop_licenses: list | None = None,
-    drop_generated: bool = False,
-    classifier_labeled: DataFrame | None = None,
-    classifier_threshold: float = 0.5,
-) -> tuple[DataFrame, DataFrame, DataFrame, dict]:
-    """Run the full chain over a (repo, path, commit, lang, content)
-    corpus. Returns (train_packed, val_docs, kept_docs, metrics) where
-    kept_docs carries (doc_id, repo, path, lang, content_sha256,
-    scrubbed_sha256, text)
-    for every surviving document (text = the SCRUBBED content,
-    scrubbed_sha256 = its PRE-span sha — the Bloom key domain); metrics
-    counts survivors per stage. The input count comes from the persisted
-    verdicts — NOT a second action over the raw source (at 100 TB that
-    extra pass is a whole corpus scan for one metric). ``token_kind``
-    picks the packing token counter ('bpe' default — the count a real
-    tokenizer's budget tracks; 'whitespace' for the cruder estimate)."""
-    from dataquality_cli_spark.operators.sampling import (
-        hash_split, pack_sequences)
-
-    metrics: dict[str, int] = {}
-
-    # 1. quality filter — persist the VERDICTS (not just kept): the
-    # input metric and the kept selection then share one pipeline pass
-    verdicts, kept = _filter_stage(
-        spark, df, bc=bc, classifier_labeled=classifier_labeled,
-        classifier_threshold=classifier_threshold)
-    verdicts = verdicts.persist()
-    metrics["input"] = verdicts.count()
-    kept = kept.persist()
-    if classifier_labeled is not None:
-        # pre-gate funnel row from the PERSISTED verdicts (no extra
-        # pipeline pass); kept is the post-classifier survivor set
-        metrics["kept_after_filter"] = verdicts.filter("keep").count()
-        metrics["after_classifier_gate"] = kept.count()
-    else:
-        metrics["kept_after_filter"] = kept.count()
-    verdicts.unpersist()
-
-    # 1a. optional license blocklist gate (codegen filter, no join)
-    if drop_licenses:
-        licensed = _license_stage(kept, drop_licenses).persist()
-        metrics["after_license_gate"] = licensed.count()
-    else:
-        licensed = kept
-
-    # 1a'. optional machine-generated-file gate (codegen filter)
-    if drop_generated:
-        human = _generated_stage(licensed).persist()
-        metrics["after_generated_gate"] = human.count()
-    else:
-        human = licensed
-
-    # 1b. optional cross-corpus Bloom prescreen (prior snapshot filter)
-    if bloom_artifact is not None:
-        screened = _bloom_stage(spark, human, bloom_artifact,
-                                prior_kept).persist()
-        metrics["after_bloom_screen"] = screened.count()
-    else:
-        screened = human
-
-    # 2. exact dedup on the scrubbed text (keep lowest doc_id)
-    exact = _exact_stage(screened).persist()
-    metrics["after_exact_dedup"] = exact.count()
-    kept.unpersist()
-    # unpersist each DISTINCT optional-stage frame once (identity
-    # dedupe: disabled stages alias the previous frame)
-    for fr in {id(f): f for f in (licensed, human, screened)}.values():
-        if fr is not kept:
-            fr.unpersist()
-
-    # 3. near-dup dedup: LSH -> verified Jaccard -> components; drop
-    # every clustered doc that is not its cluster's representative
-    uniq = _neardup_stage(exact, neardup_threshold,
-                          keep=neardup_keep).persist()
-    metrics["after_neardup_dedup"] = uniq.count()
-    exact.unpersist()
-
-    # 3b. optional order-invariant semantic dedup
-    if semantic_threshold is not None:
-        sem = _semantic_stage(uniq, semantic_threshold,
-                              pca_dim=semantic_pca_dim).persist()
-        metrics["after_semantic_dedup"] = sem.count()
-    else:
-        sem = uniq
-
-    # 3c. optional keep-one cross-document substring dedup
-    if cross_doc_min_docs is not None:
-        spanned = _span_stage(sem, min_docs=cross_doc_min_docs).persist()
-        metrics["after_span_dedup"] = spanned.count()
-        metrics["span_tokens_removed"] = int(
-            spanned.agg(F.sum("span_tokens_removed")).collect()[0][0]
-            or 0)
-    else:
-        spanned = sem
-
-    # 4. decontamination vs the eval/benchmark set (broadcast join)
-    if benchmark is not None:
-        clean = _decontaminate_stage(
-            spanned, benchmark, contamination_min_hits).persist()
-    else:
-        clean = spanned
-    metrics["after_decontamination"] = clean.count()
-
-    # 5. deterministic split: val = fraction, train = complement (same
-    # salt => exact partition of the id space, no overlap by definition)
-    val = hash_split(clean, "doc_id", val_fraction, salt="val")
-    train = clean.join(val.select("doc_id"), "doc_id", "left_anti")
-    metrics["val_docs"] = val.count()
-
-    # 6. pack the train split into context windows
-    with_tokens = _with_token_counts(train, token_kind)
-    # persisted: the metric count below and the caller's consumption
-    # must share ONE packing pass (pack ids are partition-layout
-    # dependent, so a re-run is also a consistency hazard, not just cost)
-    packed = pack_sequences(with_tokens, budget=pack_budget).persist()
-    metrics["train_docs"] = with_tokens.count()
-    metrics["train_packs"] = packed.select("pack_id").distinct().count()
-    if uniq is not clean:
-        uniq.unpersist()
-    if sem is not clean and sem is not uniq:
-        sem.unpersist()
-    if spanned is not clean and spanned is not sem and spanned is not uniq:
-        spanned.unpersist()
-
-    return packed, val, clean, metrics
-
-
 # ---------------------------------------------------------------------------
-# resumable runner: every stage boundary lands in parquet + a manifest
-# row (data first, manifest after); rerun resumes after the last stage
-# whose manifest row exists. Local parquet stands in for Iceberg — the
-# layout (stage tables + a completion manifest) maps 1:1 onto Iceberg
-# tables + snapshot metadata.
+# the runner: every stage boundary lands in parquet + a manifest row (data
+# first, manifest after); a rerun resumes after the last stage whose
+# manifest row exists. Local parquet stands in for Iceberg — the layout
+# (stage tables + a completion manifest) maps 1:1 onto Iceberg tables +
+# snapshot metadata.
 # ---------------------------------------------------------------------------
 
 _MANIFEST = "_stage_manifest"
-# stage name -> metrics key (order IS the chain)
-_STAGES = [
-    ("filtered", "kept_after_filter"),
-    ("licensed", "after_license_gate"),  # optional — row only if on
-    ("generated", "after_generated_gate"),  # optional — row only if on
-    ("bloomed", "after_bloom_screen"),  # optional — row only if on
-    ("exact", "after_exact_dedup"),
-    ("unique", "after_neardup_dedup"),
-    ("semantic", "after_semantic_dedup"),  # optional — row only if on
-    ("spans", "after_span_dedup"),  # optional — row only if on
-    ("kept", "after_decontamination"),
-    ("val", "val_docs"),
-    ("train_packed", "train_docs"),
-]
 
 
 def _read_manifest(spark: SparkSession, out_dir: str) -> dict[str, dict]:
     """Read the stage manifest through SPARK (not the driver's local
     fs): resume must work for hdfs://... / s3a://... out_dirs on the
     spark-submit deployment, where os.path.isdir is always False and a
-    local-fs check would silently disable resume."""
-    from pyspark.errors import AnalysisException
+    local-fs check would silently disable resume. The part files are
+    listed first (pipeline.parquet_files), so a fresh out_dir logs no
+    failed read; the read itself stays strict: a corrupt/drifted
+    manifest raises loudly, never misread as 'not written yet'."""
+    from dataquality_cli_spark.plans.pipeline import parquet_files
 
-    try:
-        # try-scope ONLY the read: a corrupt/drifted manifest must raise
-        # loudly, never be misread as 'not written yet'
-        mdf = spark.read.parquet(f"{out_dir}/{_MANIFEST}")
-    except AnalysisException:  # manifest not written yet
+    files = parquet_files(spark, f"{out_dir}/{_MANIFEST}")
+    if files is None:  # manifest not written yet
         return {}
     return {r["stage"]: {"n_rows": r["n_rows"], "path": r["path"]}
-            for r in mdf.collect()}
+            for r in spark.read.parquet(*files).collect()}
 
 
 def _append_manifest(spark: SparkSession, out_dir: str, stage: str,
@@ -546,7 +370,6 @@ def build_corpus_resumable(
     pack_budget: int = 2048,
     contamination_min_hits: int = 3,
     token_kind: str = "bpe",
-    neardup_keep: str = "quality",
     bc=None,
     semantic_threshold: float | None = None,
     semantic_pca_dim: int | None = None,
@@ -561,14 +384,25 @@ def build_corpus_resumable(
     run_id: str = "run0",
     fail_after_stages: int | None = None,
 ) -> dict:
-    """Run the chain with a parquet + manifest checkpoint at every stage
-    boundary; a rerun after a mid-job kill resumes from the last COMPLETE
-    stage (a partially-written stage has no manifest row, so it is
-    overwritten — never trusted, never appended to). Outputs land under
-    ``out_dir``: train_packed/, val/, kept/ (+ the intermediate stage
-    tables and _stage_manifest). Returns the per-stage metrics dict
-    (identical keys to ``build_corpus``; reruns reconstruct it from the
-    manifest, so the metric line is stable across resume).
+    """Run the full chain over a (repo, path, commit, lang, content)
+    corpus with a parquet + manifest checkpoint at every stage boundary;
+    a rerun after a mid-job kill resumes from the last COMPLETE stage (a
+    partially-written stage has no manifest row, so it is overwritten —
+    never trusted, never appended to). Outputs land under ``out_dir``:
+    train_packed/, val/ and kept/ (+ the intermediate stage tables and
+    _stage_manifest). kept/ carries (doc_id, repo, path, lang,
+    content_sha256, scrubbed_sha256, text) for every surviving document
+    (text = the SCRUBBED content, scrubbed_sha256 = its PRE-span sha —
+    the Bloom key domain; the span stage adds span_tokens_removed).
+    ``token_kind`` picks the packing token counter ('bpe' default — the
+    count a real tokenizer's budget tracks; 'whitespace' for the cruder
+    estimate).
+
+    Returns the per-stage survivor metrics (plus span_tokens_removed
+    when the span stage is on, and train_packs). The input count comes
+    from the persisted verdicts — NOT a second action over the raw
+    source. Reruns reconstruct every metric from the manifest and the
+    stage tables, so the metric line is stable across resume.
 
     ``fail_after_stages`` is a test hook: raise after N stages have been
     materialized THIS RUN (simulated kill).
@@ -580,11 +414,15 @@ def build_corpus_resumable(
     half-built chain under new thresholds would mix two corpora."""
     import json
 
-    from pyspark.errors import AnalysisException
+    from dataquality_cli_spark.operators.sampling import (
+        hash_split, pack_sequences)
+    from dataquality_cli_spark.plans.pipeline import parquet_files
 
     params = {
         "neardup_threshold": neardup_threshold,
-        "neardup_keep": neardup_keep,
+        # the only representative rule; kept so that an out_dir built
+        # under the retired 'min_id' rule fails fast instead of resuming
+        "neardup_keep": "quality",
         "custom_models": bc is not None,
         "semantic_threshold": semantic_threshold,
         "semantic_pca_dim": semantic_pca_dim,
@@ -607,23 +445,21 @@ def build_corpus_resumable(
         "token_kind": token_kind,
         "has_benchmark": benchmark is not None,
     }
-    params_json = json.dumps(params, sort_keys=True)
     params_path = f"{out_dir}/_params"
-    try:
-        pdf = spark.read.parquet(params_path)  # try-scope only the read
-    except AnalysisException:
-        pdf = None
-        spark.createDataFrame([(params_json,)], "params string") \
+    files = parquet_files(spark, params_path)
+    if files is None:
+        spark.createDataFrame([(json.dumps(params, sort_keys=True),)],
+                              "params string") \
             .coalesce(1).write.parquet(params_path)
-    prior = pdf.collect()[0]["params"] if pdf is not None else None
-    if prior is not None:
+    else:
         # compare PARSED dicts, treating a key missing from the stored
         # params as None: stage options added in later releases default
         # to None/off, so an out_dir written before an option existed
         # stays resumable with the same effective config — a raw JSON
         # string comparison bricked every in-flight pre-upgrade build
         # (and reported an EMPTY diff while doing it)
-        prior_params = json.loads(prior)
+        prior_params = json.loads(
+            spark.read.parquet(*files).collect()[0]["params"])
         diff = {k: (prior_params.get(k), v) for k, v in params.items()
                 if prior_params.get(k) != v}
         if diff:
@@ -635,7 +471,6 @@ def build_corpus_resumable(
 
     done = _read_manifest(spark, out_dir)
     computed_this_run = 0
-    metrics: dict[str, int] = {}
 
     def finish(stage: str, out_df: DataFrame) -> DataFrame:
         """Materialize one stage: write data, re-read, THEN manifest."""
@@ -661,11 +496,10 @@ def build_corpus_resumable(
     # never a completed stage with a missing input metric.
     if "filtered" not in done:
         # bc may be a zero-arg factory (e.g. corpus-model training):
-        # invoked ONLY when the filter stage actually runs, so a resumed
-        # run that skips the filter never pays the training pass
+        # _filter_stage invokes it, so a resumed run that skips the
+        # filter never pays the training pass
         verdicts, kept = _filter_stage(
-            spark, df, bc=bc() if callable(bc) else bc,
-            classifier_labeled=classifier_labeled,
+            spark, df, bc=bc, classifier_labeled=classifier_labeled,
             classifier_threshold=classifier_threshold)
         verdicts = verdicts.persist()
         _append_manifest(spark, out_dir, "input", verdicts.count(), "", run_id)
@@ -675,129 +509,62 @@ def build_corpus_resumable(
             # 'input'; the filtered stage row records the POST-gate set
             _append_manifest(spark, out_dir, "kept_heuristic",
                              verdicts.filter("keep").count(), "", run_id)
-        filtered = finish("filtered", kept)
+        cur = finish("filtered", kept)
         verdicts.unpersist()
     else:
-        filtered = load("filtered")
+        cur = load("filtered")
 
-    # 1a. optional license blocklist gate
-    if not drop_licenses:
-        licensed = filtered
-    elif "licensed" not in done:
-        licensed = finish("licensed",
-                          _license_stage(filtered, drop_licenses))
-    else:
-        licensed = load("licensed")
+    # 2. the chain after the filter, in order: (stage, metrics key,
+    # transform of the previous stage's table, or None when off)
+    chain = [
+        ("licensed", "after_license_gate",
+         (lambda d: _license_stage(d, drop_licenses))
+         if drop_licenses else None),
+        ("generated", "after_generated_gate",
+         _generated_stage if drop_generated else None),
+        ("bloomed", "after_bloom_screen",
+         (lambda d: _bloom_stage(spark, d, bloom_artifact, prior_kept))
+         if bloom_artifact is not None else None),
+        ("exact", "after_exact_dedup", _exact_stage),
+        ("unique", "after_neardup_dedup",
+         lambda d: _neardup_stage(d, neardup_threshold)),
+        ("semantic", "after_semantic_dedup",
+         (lambda d: _semantic_stage(d, semantic_threshold,
+                                    pca_dim=semantic_pca_dim))
+         if semantic_threshold is not None else None),
+        ("spans", "after_span_dedup",
+         (lambda d: _span_stage(d, min_docs=cross_doc_min_docs))
+         if cross_doc_min_docs is not None else None),
+        ("kept", "after_decontamination",
+         (lambda d: _decontaminate_stage(d, benchmark,
+                                         contamination_min_hits))
+         if benchmark is not None else None),
+    ]
+    enabled = [(stage, fn) for stage, _key, fn in chain if fn is not None]
+    for i, (stage, fn) in enumerate(enabled):
+        if stage in done:
+            cur = load(stage)
+            continue
+        # the surviving corpus is always a REAL <out>/kept directory
+        # (main()'s output contract): the LAST enabled stage writes it,
+        # and its own manifest row aliases it — never a second copy. A
+        # kill between the kept write and the alias row resumes from
+        # kept without recomputing the stage.
+        target = "kept" if i == len(enabled) - 1 else stage
+        cur = load(target) if target in done else finish(target, fn(cur))
+        if target != stage:
+            _append_manifest(spark, out_dir, stage, cur.count(),
+                             done[target]["path"], run_id)
+            done[stage] = done[target]
 
-    # 1a'. optional machine-generated-file gate
-    if not drop_generated:
-        human = licensed
-    elif "generated" not in done:
-        human = finish("generated", _generated_stage(licensed))
-    else:
-        human = load("generated")
-
-    # 1b. optional cross-corpus Bloom prescreen (prior snapshot filter)
-    if bloom_artifact is None:
-        screened = human
-    elif "bloomed" not in done:
-        screened = finish("bloomed", _bloom_stage(
-            spark, human, bloom_artifact, prior_kept))
-    else:
-        screened = load("bloomed")
-
-    # 2-4. dedup + decontamination. The surviving corpus is always a
-    # REAL <out>/kept directory (main()'s documented output contract);
-    # with no benchmark, near-dup survivors land there directly and the
-    # 'unique' stage is the manifest ALIAS — never a second copy of the
-    # corpus either way.
-    if "exact" not in done:
-        exact = finish("exact", _exact_stage(screened))
-    else:
-        exact = load("exact")
-    # a stage writes the REAL <out>/kept directory iff it is the LAST
-    # enabled stage before decontamination and there is no benchmark
-    later_than_unique = (benchmark is not None
-                         or semantic_threshold is not None
-                         or cross_doc_min_docs is not None)
-    later_than_semantic = (benchmark is not None
-                           or cross_doc_min_docs is not None)
-    if "unique" not in done:
-        if later_than_unique:
-            uniq = finish("unique", _neardup_stage(
-                exact, neardup_threshold, keep=neardup_keep))
-        else:
-            # a kill between the kept write and the unique alias row
-            # must not recompute the completed neardup stage
-            if "kept" in done:
-                uniq = load("kept")
-            else:
-                uniq = finish("kept", _neardup_stage(
-                    exact, neardup_threshold, keep=neardup_keep))
-            _append_manifest(spark, out_dir, "unique", uniq.count(),
-                             done["kept"]["path"], run_id)
-            done["unique"] = {"n_rows": None, "path": done["kept"]["path"]}
-    else:
-        uniq = load("unique")
-    # 3b. optional semantic dedup. With no benchmark its survivors ARE
-    # the kept corpus: write them as the REAL <out>/kept directory and
-    # alias the 'semantic' manifest row to it (same no-second-copy move
-    # as the unique alias above).
-    if semantic_threshold is None:
-        sem = uniq
-    elif "semantic" not in done:
-        if later_than_semantic:
-            sem = finish("semantic", _semantic_stage(
-                uniq, semantic_threshold, pca_dim=semantic_pca_dim))
-        else:
-            if "kept" in done:
-                sem = load("kept")
-            else:
-                sem = finish("kept", _semantic_stage(
-                    uniq, semantic_threshold, pca_dim=semantic_pca_dim))
-            _append_manifest(spark, out_dir, "semantic", sem.count(),
-                             done["kept"]["path"], run_id)
-            done["semantic"] = {"n_rows": None,
-                                "path": done["kept"]["path"]}
-    else:
-        sem = load("semantic")
-    # 3c. optional keep-one cross-document substring dedup (same
-    # kept-alias move as the stages above when it is the last one)
-    if cross_doc_min_docs is None:
-        spanned = sem
-    elif "spans" not in done:
-        if benchmark is not None:
-            spanned = finish("spans", _span_stage(
-                sem, min_docs=cross_doc_min_docs))
-        else:
-            if "kept" in done:
-                spanned = load("kept")
-            else:
-                spanned = finish("kept", _span_stage(
-                    sem, min_docs=cross_doc_min_docs))
-            _append_manifest(spark, out_dir, "spans", spanned.count(),
-                             done["kept"]["path"], run_id)
-            done["spans"] = {"n_rows": None,
-                             "path": done["kept"]["path"]}
-    else:
-        spanned = load("spans")
-    if "kept" not in done:
-        clean = finish("kept", _decontaminate_stage(
-            spanned, benchmark, contamination_min_hits))
-    else:
-        clean = load("kept")
-
-    # 5-6. split + pack (both deterministic given the 'kept' parquet:
+    # 3. split + pack (both deterministic given the 'kept' parquet:
     # the split is an md5 threshold; packing sees the stable parquet
     # partition layout, so a resumed pack equals the original pack)
-    from dataquality_cli_spark.operators.sampling import (
-        hash_split, pack_sequences)
-
     if "val" not in done:
-        finish("val", hash_split(clean, "doc_id", val_fraction, salt="val"))
+        finish("val", hash_split(cur, "doc_id", val_fraction, salt="val"))
     if "train_packed" not in done:
         val_ids = spark.read.parquet(done["val"]["path"]).select("doc_id")
-        train = clean.join(val_ids, "doc_id", "left_anti")
+        train = cur.join(val_ids, "doc_id", "left_anti")
         packed = finish("train_packed",
                         pack_sequences(_with_token_counts(train, token_kind),
                                        budget=pack_budget))
@@ -805,15 +572,15 @@ def build_corpus_resumable(
                          packed.select("pack_id").distinct().count(),
                          "", run_id)
 
-    # 7. optional Bloom artifact of the surviving corpus — the filter
+    # 4. optional Bloom artifact of the surviving corpus — the filter
     # the NEXT build's bloom_artifact prescreen consumes (artifact
     # first, manifest row after; resume skips a completed emit). NOT in
     # the drift-guard params: it adds an output, never changes the chain
     if emit_bloom and "bloom" not in done:
         bloom_path = f"{out_dir}/bloom"
-        emit_corpus_bloom(spark, clean, bloom_path)
+        emit_corpus_bloom(spark, cur, bloom_path)
         _append_manifest(spark, out_dir, "bloom",
-                         clean.count(), bloom_path, run_id)
+                         cur.count(), bloom_path, run_id)
 
     final = _read_manifest(spark, out_dir)
     if "train_packs" not in final:
@@ -823,8 +590,10 @@ def build_corpus_resumable(
                    .select("pack_id").distinct().count())
         _append_manifest(spark, out_dir, "train_packs", n_packs, "", run_id)
         final["train_packs"] = {"n_rows": n_packs, "path": ""}
-    metrics["input"] = final["input"]["n_rows"]
-    for stage, key in _STAGES:
+    metrics = {"input": final["input"]["n_rows"]}
+    for stage, key in [("filtered", "kept_after_filter"),
+                       *((stage, key) for stage, key, _fn in chain),
+                       ("val", "val_docs"), ("train_packed", "train_docs")]:
         if stage in final:  # optional stages leave no row when off
             metrics[key] = final[stage]["n_rows"]
     if "kept_heuristic" in final:
@@ -832,6 +601,12 @@ def build_corpus_resumable(
         # heuristic survivors rode the kept_heuristic pseudo-row
         metrics["after_classifier_gate"] = metrics["kept_after_filter"]
         metrics["kept_after_filter"] = final["kept_heuristic"]["n_rows"]
+    if "spans" in final:
+        # the span stage keeps every row: its funnel metric is the
+        # tokens it removed, summed from its own (completed) table
+        metrics["span_tokens_removed"] = int(
+            spark.read.parquet(final["spans"]["path"])
+            .agg(F.sum("span_tokens_removed")).collect()[0][0] or 0)
     metrics["train_packs"] = final["train_packs"]["n_rows"]
     return metrics
 
@@ -863,8 +638,6 @@ def main() -> None:
     ap.add_argument("--val-fraction", type=float, default=0.05)
     ap.add_argument("--pack-budget", type=int, default=2048)
     ap.add_argument("--neardup-threshold", type=float, default=0.7)
-    ap.add_argument("--neardup-keep", default="quality",
-                    choices=["quality", "min_id"])
     ap.add_argument("--semantic-dedup-threshold", type=float, default=None,
                     help="enable the order-invariant semantic dedup "
                          "stage (hash-embed -> k-means -> SemDeDup) at "
@@ -952,7 +725,6 @@ def main() -> None:
     metrics = build_corpus_resumable(
         spark, df, args.output, benchmark=bench,
         neardup_threshold=args.neardup_threshold,
-        neardup_keep=args.neardup_keep,
         val_fraction=args.val_fraction, pack_budget=args.pack_budget,
         token_kind=args.token_kind, bc=bc,
         semantic_threshold=args.semantic_dedup_threshold,

@@ -16,7 +16,8 @@ pmod(xxhash64(repo, path), n_parts)``; a metrics table records completed
 partitions; a rerun anti-joins completed part_ids and only processes the
 remainder (idempotent — deterministic UDFs, no time/random dependence).
 Each part is scored once: its manifest counts are read back from the
-partition just written. Dynamic overwrite is an option of that write only.
+partition just written (an empty part records one zero row, so it is done
+too). Dynamic overwrite is an option of that write only.
 """
 
 from __future__ import annotations
@@ -117,30 +118,39 @@ def _with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
     )
 
 
-def completed_parts(spark: SparkSession, out_dir: str) -> set[int]:
-    """Completed partition ids from the manifest, read through SPARK so
-    resume also works for hdfs://... / s3a://... output dirs (an
-    os.path probe is always False there and would silently disable
-    resume). Iceberg deployment: a snapshot-metadata query instead.
+def parquet_files(spark: SparkSession, path: str) -> list[str] | None:
+    """The parquet part files directly under ``path``, listed through
+    the Hadoop FileSystem of the path (so hdfs://... / s3a://... dirs
+    work, where an os.path probe is always False), or None when ``path``
+    does not exist.
 
-    A missing manifest (not written yet) is probed through the Hadoop
-    FileSystem of its path, so a fresh dir logs no failed read; the read
-    itself stays strict: a schema-drifted/corrupt manifest raises loudly
-    rather than being misread as 'not written yet' (which would silently
-    reprocess every partition and double-append metrics). It reads the
-    manifest's part files, listed through the same FileSystem, rather
-    than the directory: Spark treats a root whose name starts with '_'
-    as hidden and warns that it ignored it (and a glob path logs a
-    failed metadata-dir probe)."""
-    manifest = os.path.join(out_dir, "_manifest")
+    Every resume read goes through it: probing first means a fresh dir
+    logs no failed read, and reading the listed files rather than the
+    directory means Spark never sees an underscore-named root, which it
+    treats as hidden and warns that it ignored (a glob path instead logs
+    a failed metadata-dir probe). The read that follows stays strict: a
+    dir with no part files, or a corrupt one, raises."""
     sc = spark.sparkContext
     Path = sc._jvm.org.apache.hadoop.fs.Path
-    path = Path(manifest)
-    fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(path):
+    root = Path(path)
+    fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return None
+    return [st.getPath().toString()
+            for st in fs.globStatus(Path(root, "*.parquet"))]
+
+
+def completed_parts(spark: SparkSession, out_dir: str) -> set[int]:
+    """Completed partition ids from the manifest, read through SPARK so
+    resume also works for hdfs://... / s3a://... output dirs.
+    Iceberg deployment: a snapshot-metadata query instead. A missing
+    manifest means nothing is done yet; a schema-drifted/corrupt one
+    raises loudly rather than being misread as 'not written yet' (which
+    would silently reprocess every partition and double-append
+    metrics)."""
+    files = parquet_files(spark, os.path.join(out_dir, "_manifest"))
+    if files is None:
         return set()
-    files = [st.getPath().toString()
-             for st in fs.globStatus(Path(path, "*.parquet"))]
     mdf = spark.read.parquet(*files)
     return {r.part_id for r in mdf.select("part_id").distinct().collect()}
 
@@ -154,7 +164,8 @@ def run_with_checkpoint(spark: SparkSession, df: DataFrame, out_dir: str,
     after its data is fully written; rerun overwrites any partial
     unmarked partition via dynamic partition overwrite, an option of the
     data write alone). Each part is scored once: its manifest rows are
-    counted from the partition just written (an empty part counts nothing).
+    counted from the partition just written; a part that received no rows
+    writes no partition and records one zero row instead.
 
     ``fail_after_parts`` is a test hook simulating a mid-job kill.
     ``bc``: an existing model broadcast, or a ZERO-ARG FACTORY for one
@@ -180,13 +191,20 @@ def run_with_checkpoint(spark: SparkSession, df: DataFrame, out_dir: str,
         verdicts = run_pipeline(spark, chunk, bc=bc).select(*VERDICT_COLS, "part_id")
         (verdicts.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
          .partitionBy("part_id").parquet(data_dir))
-        metrics = (
-            spark.read.schema(verdicts.schema).parquet(data_dir).where(F.col("part_id") == p)
-            .groupBy("drop_reason")
-            .agg(F.count("*").alias("n"), F.sum("total_scrub_hits").alias("scrub_hits"))
-            .withColumn("part_id", F.lit(p))
-            .withColumn("run_id", F.lit(run_id))
-        )
+        if parquet_files(spark, os.path.join(data_dir, f"part_id={p}")) is None:
+            # an empty part writes no partition: one zero row still marks
+            # it done, so a rerun neither re-scores it nor resolves bc
+            metrics = spark.createDataFrame(
+                [(None, 0, 0, p, run_id)],
+                "drop_reason string, n long, scrub_hits long, part_id int, run_id string")
+        else:
+            metrics = (
+                spark.read.schema(verdicts.schema).parquet(data_dir).where(F.col("part_id") == p)
+                .groupBy("drop_reason")
+                .agg(F.count("*").alias("n"), F.sum("total_scrub_hits").alias("scrub_hits"))
+                .withColumn("part_id", F.lit(p))
+                .withColumn("run_id", F.lit(run_id))
+            )
         metrics.write.mode("append").parquet(manifest)
 
 

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import broadcast_models, with_full_scores
-from ..plans.pipeline import VERDICT_COLS, apply_verdict
+from ..plans.pipeline import VERDICT_COLS, apply_verdict, parquet_files
 
 
 def stream_quality_filter(spark: SparkSession, input_dir: str, schema,
@@ -115,15 +115,14 @@ def _compacted_upto(spark: SparkSession, out_dir: str,
                     index_dirname: str = _INDEX_DIRNAME) -> int | None:
     """Highest epoch folded into the compacted index, or None. Read
     through Spark (not the driver's local fs) so hdfs://...//s3a://...
-    out_dirs work on the spark-submit deployment."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        mdf = spark.read.parquet(
-            os.path.join(out_dir, index_dirname, _INDEX_MANIFEST))
-    except AnalysisException:
+    out_dirs work on the spark-submit deployment; the manifest's part
+    files are listed first (pipeline.parquet_files), so a missing one
+    logs no failed read."""
+    files = parquet_files(
+        spark, os.path.join(out_dir, index_dirname, _INDEX_MANIFEST))
+    if files is None:
         return None
-    rows = mdf.agg(F.max("upto").alias("m")).collect()
+    rows = spark.read.parquet(*files).agg(F.max("upto").alias("m")).collect()
     return None if not rows or rows[0]["m"] is None else int(rows[0]["m"])
 
 

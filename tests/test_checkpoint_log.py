@@ -47,3 +47,38 @@ def test_fresh_checkpoint_dir_logs_no_manifest_trace(tmp_path, capfd):
     assert "resumed [0, 1]" in stdout
     assert "All paths were ignored" not in stderr, stderr[-2000:]
     assert "_manifest" not in stderr, stderr[-2000:]
+
+
+CORPUS_BUILD = """
+import sys
+sys.path.insert(0, {repo!r})
+from dataquality_cli_spark.jobs.corpus_build_job import build_corpus_resumable
+from dataquality_cli_spark.session import get_spark
+from dataquality_cli_spark.sources.synth import corpus_to_rows, gen_corpus
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+df = spark.createDataFrame(
+    corpus_to_rows(gen_corpus(20, seed=5)),
+    "repo string, path string, commit string, lang string, content string")
+m1 = build_corpus_resumable(spark, df, {out!r}, val_fraction=0.1)
+m2 = build_corpus_resumable(spark, df, {out!r}, val_fraction=0.1)
+print("same metrics", m1 == m2, m1["input"])
+spark.stop()
+"""
+
+
+def test_corpus_build_manifest_reads_log_nothing(tmp_path, capfd):
+    """A corpus build into a new out_dir, then a rerun into the same dir:
+    neither logs a failed read of the stage manifest or the params table
+    (not written yet on the first run) nor a hidden-path warning for
+    their underscore-named dirs (read on the rerun)."""
+    out = str(tmp_path / "out")
+    proc = subprocess.run(
+        [sys.executable, "-c", CORPUS_BUILD.format(repo=REPO, out=out)],
+        timeout=300, cwd=REPO)
+    stdout, stderr = capfd.readouterr()
+    assert proc.returncode == 0, stderr[-2000:]
+    assert "same metrics True 20" in stdout
+    assert "All paths were ignored" not in stderr, stderr[-2000:]
+    assert "_stage_manifest" not in stderr, stderr[-2000:]
+    assert "_params" not in stderr, stderr[-2000:]

@@ -6,13 +6,22 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dataquality_cli_spark.jobs.corpus_build_job import build_corpus
+from dataquality_cli_spark.jobs.corpus_build_job import build_corpus_resumable
 from dataquality_cli_spark.sources.synth import corpus_to_rows, gen_corpus
 
 SCHEMA = "repo string, path string, commit string, lang string, content string"
 
 
-def test_corpus_build_end_to_end(spark):
+def _build(spark, df, out, **kw):
+    """One corpus build into ``out``: (train_packed, val, kept, metrics),
+    the three frames read back from the build's output dirs."""
+    m = build_corpus_resumable(spark, df, str(out), **kw)
+    packed, val, kept = (spark.read.parquet(f"{out}/{name}")
+                         for name in ("train_packed", "val", "kept"))
+    return packed, val, kept, m
+
+
+def test_corpus_build_end_to_end(spark, tmp_path):
     base = corpus_to_rows(gen_corpus(250, seed=17))
     # plant exact duplicates (same content, new path) so dedup has work
     dups = [(r, p + ".copy", c, l, t) for r, p, c, l, t in base[:25]]
@@ -21,8 +30,9 @@ def test_corpus_build_end_to_end(spark):
         [(i, t) for i, (_r, _p, _c, _l, t) in enumerate(base[:5])],
         "doc_id long, text string",
     )
-    packed, val, clean, m = build_corpus(
-        spark, df, benchmark=bench, val_fraction=0.1, pack_budget=1024)
+    packed, val, clean, m = _build(
+        spark, df, tmp_path / "out", benchmark=bench, val_fraction=0.1,
+        pack_budget=1024)
 
     # monotone survivor funnel
     assert (m["input"] >= m["kept_after_filter"] >= m["after_exact_dedup"]
@@ -53,7 +63,7 @@ def test_corpus_build_end_to_end(spark):
     assert m["after_exact_dedup"] < m["kept_after_filter"]
 
 
-def test_two_commits_of_one_path_are_distinct_documents(spark):
+def test_two_commits_of_one_path_are_distinct_documents(spark, tmp_path):
     """doc_id must hash the FULL (repo, path, commit) identity — a
     (repo, path)-only key made the dedup survivor join fan out (2 kept
     rows became 4)."""
@@ -64,8 +74,8 @@ def test_two_commits_of_one_path_are_distinct_documents(spark):
     two_commits = [(r, "multi/version.py", "a" * 40, l, t),
                    (r, "multi/version.py", "b" * 40, l, t + "\nx = 1")]
     df = spark.createDataFrame(base + two_commits, SCHEMA)
-    packed, val, clean, m = build_corpus(spark, df, val_fraction=0.0,
-                                         pack_budget=1024)
+    packed, val, clean, m = _build(spark, df, tmp_path / "out",
+                                   val_fraction=0.0, pack_budget=1024)
     # the funnel never grows (the fan-out bug made a later stage exceed
     # an earlier one)
     assert (m["kept_after_filter"] >= m["after_exact_dedup"]
@@ -77,10 +87,9 @@ def test_two_commits_of_one_path_are_distinct_documents(spark):
 
 
 def test_neardup_stage_keeps_best_quality_member(spark):
-    """keep='quality' (default) must keep the BEST-scoring member of a
-    planted near-dup cluster — even when it has the higher doc_id — and
-    keep='min_id' must keep the min-id one; a score-flat cluster keeps
-    the min id under both modes (byte-identical tie behavior)."""
+    """The near-dup stage must keep the BEST-scoring member of a
+    planted near-dup cluster — even when it has the higher doc_id; a
+    score-flat cluster keeps its min id; unclustered docs are kept."""
     import random
 
     from dataquality_cli_spark.jobs.corpus_build_job import _neardup_stage
@@ -105,15 +114,10 @@ def test_neardup_stage_keeps_best_quality_member(spark):
           for r in quality_score(exact).collect()}
     assert sc[2] > sc[1] and sc[10] == sc[11]
 
-    kept_q = {r.doc_id for r in
-              _neardup_stage(exact, 0.7, keep="quality").collect()}
-    kept_m = {r.doc_id for r in
-              _neardup_stage(exact, 0.7, keep="min_id").collect()}
+    kept_q = {r.doc_id for r in _neardup_stage(exact, 0.7).collect()}
     assert 2 in kept_q and 1 not in kept_q       # best member wins
-    assert 1 in kept_m and 2 not in kept_m       # old convention
     assert 10 in kept_q and 11 not in kept_q     # tie -> min id
-    assert 10 in kept_m and 11 not in kept_m     # identical on ties
-    assert 20 in kept_q and 20 in kept_m         # unclustered untouched
+    assert 20 in kept_q                          # unclustered untouched
 
 
 def test_corpus_build_resumable_kill_and_rerun(spark, tmp_path):
@@ -268,18 +272,17 @@ def test_corpus_report_empty_corpus(spark):
 def test_corpus_build_semantic_stage(spark, tmp_path):
     """--semantic-dedup-threshold: a sentence-reordered duplicate (same
     token bag — invisible to exact sha256 dedup, under-scored by char
-    shingles) is removed only when the semantic stage is ON; the
-    resumable runner produces the same funnel and keeps <out>/kept as a
-    real directory with no benchmark."""
+    shingles) is removed only when the semantic stage is ON; with no
+    benchmark <out>/kept is a real directory that the 'semantic' manifest
+    row aliases, and a rerun is a noop."""
     import random
 
-    from dataquality_cli_spark.jobs.corpus_build_job import (
-        _read_manifest, build_corpus, build_corpus_resumable)
+    from dataquality_cli_spark.jobs.corpus_build_job import _read_manifest
 
     base = corpus_to_rows(gen_corpus(80, seed=37))
     # pick a KEPT doc and append a token-reordered copy at another path
-    probe = build_corpus(spark, spark.createDataFrame(base, SCHEMA),
-                         val_fraction=0.0, pack_budget=1024)[2]
+    probe = _build(spark, spark.createDataFrame(base, SCHEMA),
+                   tmp_path / "probe", val_fraction=0.0, pack_budget=1024)[2]
     kept_one = probe.orderBy("doc_id").limit(1).collect()[0]
     src = next(r for r in base if r[1] == kept_one.path)
     lines = src[4].split("\n")
@@ -289,11 +292,11 @@ def test_corpus_build_semantic_stage(spark, tmp_path):
                  "\n".join(lines))
     df = spark.createDataFrame(base + [reordered], SCHEMA)
 
-    _p, _v, clean_off, m_off = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024)
-    _p, _v, clean_on, m_on = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024,
-        semantic_threshold=0.999)
+    _p, _v, clean_off, m_off = _build(
+        spark, df, tmp_path / "off", val_fraction=0.0, pack_budget=1024)
+    out = str(tmp_path / "on")
+    kw = dict(val_fraction=0.0, pack_budget=1024, semantic_threshold=0.999)
+    _p, _v, clean_on, m_on = _build(spark, df, out, **kw)
     assert "after_semantic_dedup" not in m_off
     assert m_on["after_semantic_dedup"] == m_on["after_neardup_dedup"] - 1
     off_paths = {r.path for r in clean_off.collect()}
@@ -303,20 +306,12 @@ def test_corpus_build_semantic_stage(spark, tmp_path):
     assert len({src[1], reordered[1]} & on_paths) == 1
     assert off_paths - on_paths <= {src[1], reordered[1]}
 
-    out = str(tmp_path / "resume")
-    m_res = build_corpus_resumable(
-        spark, df, out, val_fraction=0.0, pack_budget=1024,
-        semantic_threshold=0.999)
-    assert m_res["after_semantic_dedup"] == m_on["after_semantic_dedup"]
-    assert m_res["after_decontamination"] == m_on["after_decontamination"]
     import os as _os
     assert _os.path.isdir(f"{out}/kept")
     man = _read_manifest(spark, out)
     assert man["semantic"]["path"] == man["kept"]["path"]  # alias, no copy
     # rerun over the complete dir reconstructs identical metrics
-    assert build_corpus_resumable(
-        spark, df, out, val_fraction=0.0, pack_budget=1024,
-        semantic_threshold=0.999) == m_res
+    assert build_corpus_resumable(spark, df, out, **kw) == m_on
 
 
 def test_corpus_build_bloom_prescreen(spark, tmp_path):
@@ -329,8 +324,7 @@ def test_corpus_build_bloom_prescreen(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from dataquality_cli_spark.jobs.corpus_build_job import (
-        _read_manifest, build_corpus, build_corpus_resumable)
+    from dataquality_cli_spark.jobs.corpus_build_job import _read_manifest
 
     prior_rows = corpus_to_rows(gen_corpus(60, seed=91))
     prior_df = spark.createDataFrame(prior_rows, SCHEMA)
@@ -356,8 +350,8 @@ def test_corpus_build_bloom_prescreen(spark, tmp_path):
         F.sha2(F.col("text"), 256).alias("h")).collect()}
 
     # no prescreen: the cross-corpus copies survive the whole chain
-    _p, _v, clean_off, m_off = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024)
+    _p, _v, clean_off, m_off = _build(
+        spark, df, tmp_path / "off", val_fraction=0.0, pack_budget=1024)
     off_hashes = {r.h for r in clean_off.select(
         F.sha2(F.col("text"), 256).alias("h")).collect()}
     assert len(off_hashes & prior_hashes) >= 1  # plant is non-vacuous
@@ -371,10 +365,11 @@ def test_corpus_build_bloom_prescreen(spark, tmp_path):
     assert n_expected >= 10  # every planted copy passed the filter again
 
     # verified prescreen: exactly the true cross-corpus dups drop
-    _p, _v, clean_v, m_v = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024,
-        bloom_artifact=f"{prior_out}/bloom",
-        prior_kept=f"{prior_out}/kept")
+    out = str(tmp_path / "screened")
+    kw = dict(val_fraction=0.0, pack_budget=1024,
+              bloom_artifact=f"{prior_out}/bloom",
+              prior_kept=f"{prior_out}/kept")
+    _p, _v, clean_v, m_v = _build(spark, df, out, **kw)
     v_hashes = {r.h for r in clean_v.select(
         F.sha2(F.col("text"), 256).alias("h")).collect()}
     assert not v_hashes & prior_hashes        # cross-corpus dedup holds
@@ -383,23 +378,17 @@ def test_corpus_build_bloom_prescreen(spark, tmp_path):
     assert off_hashes - v_hashes <= prior_hashes
 
     # unverified prescreen: at least as aggressive (fpp may over-drop)
-    _p, _v, clean_u, m_u = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024,
-        bloom_artifact=f"{prior_out}/bloom")
+    _p, _v, clean_u, m_u = _build(
+        spark, df, tmp_path / "unverified", val_fraction=0.0,
+        pack_budget=1024, bloom_artifact=f"{prior_out}/bloom")
     assert m_u["after_bloom_screen"] <= m_v["after_bloom_screen"]
     u_hashes = {r.h for r in clean_u.select(
         F.sha2(F.col("text"), 256).alias("h")).collect()}
     assert not u_hashes & prior_hashes
 
-    # resumable: manifest row, idempotent rerun, drift guard
-    out = str(tmp_path / "screened")
-    kw = dict(val_fraction=0.0, pack_budget=1024,
-              bloom_artifact=f"{prior_out}/bloom",
-              prior_kept=f"{prior_out}/kept")
-    m_res = build_corpus_resumable(spark, df, out, **kw)
-    assert m_res["after_bloom_screen"] == m_v["after_bloom_screen"]
+    # resume: manifest row, idempotent rerun, drift guard
     assert "bloomed" in _read_manifest(spark, out)
-    assert build_corpus_resumable(spark, df, out, **kw) == m_res
+    assert build_corpus_resumable(spark, df, out, **kw) == m_v
     import pytest as _pytest
     with _pytest.raises(ValueError, match="different parameters"):
         build_corpus_resumable(spark, df, out, val_fraction=0.0,
@@ -446,16 +435,15 @@ def test_resume_params_guard_tolerates_missing_new_keys(spark, tmp_path):
 def test_corpus_build_license_gate(spark, tmp_path):
     """--drop-licenses: files whose detected license family is
     blocklisted are dropped right after the filter; unmarked files
-    pass; the chain is unchanged when the gate is off; resumable
-    manifest row + drift guard cover the new stage."""
+    pass; the chain is unchanged when the gate is off; the manifest
+    row, noop rerun and drift guard cover the new stage."""
     from pyspark.sql import functions as F
 
-    from dataquality_cli_spark.jobs.corpus_build_job import (
-        _read_manifest, build_corpus, build_corpus_resumable)
+    from dataquality_cli_spark.jobs.corpus_build_job import _read_manifest
 
     base = corpus_to_rows(gen_corpus(60, seed=47))
-    probe = build_corpus(spark, spark.createDataFrame(base, SCHEMA),
-                         val_fraction=0.0, pack_budget=1024)[2]
+    probe = _build(spark, spark.createDataFrame(base, SCHEMA),
+                   tmp_path / "probe", val_fraction=0.0, pack_budget=1024)[2]
     kept_paths = [r.path for r in
                   probe.select("path").orderBy("path").collect()]
     gpl_targets = set(kept_paths[:3])
@@ -475,15 +463,16 @@ def test_corpus_build_license_gate(spark, tmp_path):
         rows.append((r, p, c, lang, t))
     df = spark.createDataFrame(rows, SCHEMA)
 
-    _p, _v, clean_off, m_off = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024)
+    _p, _v, clean_off, m_off = _build(
+        spark, df, tmp_path / "off", val_fraction=0.0, pack_budget=1024)
     off_paths = {r.path for r in clean_off.collect()}
     # plant is non-vacuous: the headered files survive the off chain
     assert gpl_targets <= off_paths and mit_targets <= off_paths
 
-    _p, _v, clean_on, m_on = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024,
-        drop_licenses=["gpl"])
+    out = str(tmp_path / "lic")
+    kw = dict(val_fraction=0.0, pack_budget=1024,
+              drop_licenses=["gpl"])
+    _p, _v, clean_on, m_on = _build(spark, df, out, **kw)
     on_paths = {r.path for r in clean_on.collect()}
     assert "after_license_gate" not in m_off
     assert m_on["kept_after_filter"] - m_on["after_license_gate"] == 3
@@ -491,13 +480,8 @@ def test_corpus_build_license_gate(spark, tmp_path):
     assert mit_targets <= on_paths          # other licenses untouched
     assert off_paths - on_paths == gpl_targets
 
-    out = str(tmp_path / "lic")
-    kw = dict(val_fraction=0.0, pack_budget=1024,
-              drop_licenses=["gpl"])
-    m_res = build_corpus_resumable(spark, df, out, **kw)
-    assert m_res["after_license_gate"] == m_on["after_license_gate"]
     assert "licensed" in _read_manifest(spark, out)
-    assert build_corpus_resumable(spark, df, out, **kw) == m_res
+    assert build_corpus_resumable(spark, df, out, **kw) == m_on
     import pytest as _pytest
     with _pytest.raises(ValueError, match="drop_licenses"):
         build_corpus_resumable(spark, df, out, val_fraction=0.0,
@@ -535,11 +519,11 @@ def test_bloom_key_domain_survives_span_rewrite(spark, tmp_path):
     import random
 
     from dataquality_cli_spark.jobs.corpus_build_job import (
-        _bloom_stage, _filter_stage, build_corpus, emit_corpus_bloom)
+        _bloom_stage, _filter_stage, emit_corpus_bloom)
 
     base = corpus_to_rows(gen_corpus(80, seed=43))
-    probe = build_corpus(spark, spark.createDataFrame(base, SCHEMA),
-                         val_fraction=0.0, pack_budget=1024)[2]
+    probe = _build(spark, spark.createDataFrame(base, SCHEMA),
+                   tmp_path / "probe", val_fraction=0.0, pack_budget=1024)[2]
     kept_paths = [r.path for r in
                   probe.select("path").orderBy("path").collect()]
     rng = random.Random(78)
@@ -549,8 +533,8 @@ def test_bloom_key_domain_survives_span_rewrite(spark, tmp_path):
             for (r, p, c, lang, t) in base]
     df = spark.createDataFrame(rows, SCHEMA)
 
-    _p, _v, clean, _m = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024,
+    _p, _v, clean, _m = _build(
+        spark, df, tmp_path / "spans", val_fraction=0.0, pack_budget=1024,
         cross_doc_min_docs=3)
     rewritten = {r.doc_id for r in
                  clean.filter(F.col("span_tokens_removed") > 0)
@@ -574,20 +558,19 @@ def test_corpus_build_cross_doc_span_stage(spark, tmp_path):
     """--cross-doc-min-docs: a passage planted into several surviving
     docs keeps exactly one canonical copy across the kept corpus;
     untouched docs stay byte-identical; the chain is byte-identical
-    when the stage is off; the resumable runner writes <out>/kept via
-    the spans alias (no benchmark) and resumes as a noop."""
+    when the stage is off; <out>/kept is written via the spans alias (no
+    benchmark) and a rerun is a noop with identical metrics."""
     import random
 
     from pyspark.sql import functions as F
 
-    from dataquality_cli_spark.jobs.corpus_build_job import (
-        _read_manifest, build_corpus, build_corpus_resumable)
+    from dataquality_cli_spark.jobs.corpus_build_job import _read_manifest
 
     base = corpus_to_rows(gen_corpus(80, seed=43))
     # find docs that survive the unmodified chain, then plant a shared
     # 15-token passage into 5 of their contents
-    probe = build_corpus(spark, spark.createDataFrame(base, SCHEMA),
-                         val_fraction=0.0, pack_budget=1024)[2]
+    probe = _build(spark, spark.createDataFrame(base, SCHEMA),
+                   tmp_path / "probe", val_fraction=0.0, pack_budget=1024)[2]
     kept_paths = [r.path for r in
                   probe.select("path").orderBy("path").collect()]
     rng = random.Random(77)
@@ -597,11 +580,11 @@ def test_corpus_build_cross_doc_span_stage(spark, tmp_path):
             for (r, p, c, lang, t) in base]
     df = spark.createDataFrame(rows, SCHEMA)
 
-    _p, _v, clean_off, m_off = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024)
-    _p, _v, clean_on, m_on = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024,
-        cross_doc_min_docs=3)
+    _p, _v, clean_off, m_off = _build(
+        spark, df, tmp_path / "off", val_fraction=0.0, pack_budget=1024)
+    out = str(tmp_path / "spans")
+    kw = dict(val_fraction=0.0, pack_budget=1024, cross_doc_min_docs=3)
+    _p, _v, clean_on, m_on = _build(spark, df, out, **kw)
     assert "after_span_dedup" not in m_off
     # row count unchanged; tokens actually removed
     assert m_on["after_span_dedup"] == m_on["after_neardup_dedup"]
@@ -623,17 +606,13 @@ def test_corpus_build_cross_doc_span_stage(spark, tmp_path):
         if r.span_tokens_removed == 0:
             assert off_texts[r.path] == r.text, r.path
 
-    # resumable: spans aliases kept (no benchmark), noop rerun
-    out = str(tmp_path / "spans")
-    kw = dict(val_fraction=0.0, pack_budget=1024, cross_doc_min_docs=3)
-    m_res = build_corpus_resumable(spark, df, out, **kw)
-    assert m_res["after_span_dedup"] == m_on["after_span_dedup"]
+    # resume: spans aliases kept (no benchmark), noop rerun
     man = _read_manifest(spark, out)
     assert man["spans"]["path"] == man["kept"]["path"]  # alias, no copy
     kept_texts = {r.path: r.text for r in
                   spark.read.parquet(f"{out}/kept").collect()}
     assert sum(passage in t for t in kept_texts.values()) == 1
-    assert build_corpus_resumable(spark, df, out, **kw) == m_res
+    assert build_corpus_resumable(spark, df, out, **kw) == m_on
 
 
 def test_topic_clusters_separates_planted_topics(spark):
@@ -739,10 +718,8 @@ def test_corpus_build_classifier_gate(spark, tmp_path):
     Trained on the pipeline's OWN keep verdicts as labels, survivors
     score high, so a mid threshold keeps ~all and the gate tightens
     monotonically with the threshold; funnel rows record both counts;
-    the chain is byte-identical when off; resumable reconstructs the
-    same metrics and guards drift."""
-    from dataquality_cli_spark.jobs.corpus_build_job import (
-        build_corpus, build_corpus_resumable)
+    the chain is byte-identical when off; a rerun reconstructs the
+    same metrics and the drift guard holds."""
     from dataquality_cli_spark.plans.pipeline import run_pipeline
 
     base = corpus_to_rows(gen_corpus(80, seed=53))
@@ -758,35 +735,30 @@ def test_corpus_build_classifier_gate(spark, tmp_path):
     ).join(lab_df.select("repo", "path", "commit", "content"),
            ["repo", "path", "commit"])
 
-    _p, _v, clean_off, m_off = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024)
+    _p, _v, clean_off, m_off = _build(
+        spark, df, tmp_path / "off", val_fraction=0.0, pack_budget=1024)
     assert "after_classifier_gate" not in m_off
 
-    _p, _v, clean_mid, m_mid = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024,
-        classifier_labeled=labeled, classifier_threshold=0.5)
+    out = str(tmp_path / "clf")
+    kw = dict(val_fraction=0.0, pack_budget=1024,
+              classifier_labeled=labeled, classifier_threshold=0.5)
+    _p, _v, clean_mid, m_mid = _build(spark, df, out, **kw)
     assert m_mid["after_classifier_gate"] <= m_mid["kept_after_filter"]
     assert m_mid["kept_after_filter"] == m_off["kept_after_filter"]
     # distilled model agrees with its teacher on >= 80% of survivors
     assert (m_mid["after_classifier_gate"]
             >= 0.8 * m_mid["kept_after_filter"])
     # tighter threshold keeps a subset
-    _p, _v, clean_hi, m_hi = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024,
+    _p, _v, clean_hi, m_hi = _build(
+        spark, df, tmp_path / "hi", val_fraction=0.0, pack_budget=1024,
         classifier_labeled=labeled, classifier_threshold=0.99)
     assert m_hi["after_classifier_gate"] <= m_mid["after_classifier_gate"]
     hi_ids = {r.doc_id for r in clean_hi.collect()}
     mid_ids = {r.doc_id for r in clean_mid.collect()}
     assert hi_ids <= mid_ids
 
-    # resumable: identical funnel, noop rerun, drift guard
-    out = str(tmp_path / "clf")
-    kw = dict(val_fraction=0.0, pack_budget=1024,
-              classifier_labeled=labeled, classifier_threshold=0.5)
-    m_res = build_corpus_resumable(spark, df, out, **kw)
-    assert m_res["kept_after_filter"] == m_mid["kept_after_filter"]
-    assert m_res["after_classifier_gate"] == m_mid["after_classifier_gate"]
-    assert build_corpus_resumable(spark, df, out, **kw) == m_res
+    # resume: noop rerun, drift guard
+    assert build_corpus_resumable(spark, df, out, **kw) == m_mid
     import pytest as _pytest
     with _pytest.raises(ValueError, match="classifier"):
         build_corpus_resumable(spark, df, out, val_fraction=0.0,
@@ -849,15 +821,14 @@ def test_cli_code_report_smoke(spark, tmp_path, capsys):
 def test_corpus_build_generated_gate(spark, tmp_path):
     """--drop-generated: files carrying machine-generated markers are
     dropped right after the filter (and the license gate); the chain
-    is unchanged when the gate is off; the resumable path writes a
-    'generated' manifest row, reruns are idempotent, and the drift
-    guard rejects a resume with the gate toggled."""
-    from dataquality_cli_spark.jobs.corpus_build_job import (
-        _read_manifest, build_corpus, build_corpus_resumable)
+    is unchanged when the gate is off; the build writes a 'generated'
+    manifest row, reruns are idempotent, and the drift guard rejects a
+    resume with the gate toggled."""
+    from dataquality_cli_spark.jobs.corpus_build_job import _read_manifest
 
     base = corpus_to_rows(gen_corpus(60, seed=53))
-    probe = build_corpus(spark, spark.createDataFrame(base, SCHEMA),
-                         val_fraction=0.0, pack_budget=1024)[2]
+    probe = _build(spark, spark.createDataFrame(base, SCHEMA),
+                   tmp_path / "probe", val_fraction=0.0, pack_budget=1024)[2]
     kept_paths = [r.path for r in
                   probe.select("path").orderBy("path").collect()]
     gen_targets = set(kept_paths[:3])
@@ -870,15 +841,15 @@ def test_corpus_build_generated_gate(spark, tmp_path):
     # generator plants 'auto-generated boilerplate' banners of its own)
     df = spark.createDataFrame(rows, SCHEMA)
 
-    _p, _v, off, m_off = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024)
+    _p, _v, off, m_off = _build(
+        spark, df, tmp_path / "off", val_fraction=0.0, pack_budget=1024)
     off_paths = {r.path for r in off.collect()}
     assert gen_targets <= off_paths          # plant is non-vacuous
     assert "after_generated_gate" not in m_off
 
-    _p, _v, on, m_on = build_corpus(
-        spark, df, val_fraction=0.0, pack_budget=1024,
-        drop_generated=True)
+    out = str(tmp_path / "gen")
+    kw = dict(val_fraction=0.0, pack_budget=1024, drop_generated=True)
+    _p, _v, on, m_on = _build(spark, df, out, **kw)
     on_paths = {r.path for r in on.collect()}
     assert not (gen_targets & on_paths)      # marked files gone
     # every dropped file carried a marker (gate drops nothing else):
@@ -886,12 +857,8 @@ def test_corpus_build_generated_gate(spark, tmp_path):
     assert m_on["kept_after_filter"] - m_on["after_generated_gate"] >= 3
     assert (off_paths - on_paths) >= gen_targets
 
-    out = str(tmp_path / "gen")
-    kw = dict(val_fraction=0.0, pack_budget=1024, drop_generated=True)
-    m_res = build_corpus_resumable(spark, df, out, **kw)
-    assert m_res["after_generated_gate"] == m_on["after_generated_gate"]
     assert "generated" in _read_manifest(spark, out)
-    assert build_corpus_resumable(spark, df, out, **kw) == m_res
+    assert build_corpus_resumable(spark, df, out, **kw) == m_on
     import pytest as _pytest
     with _pytest.raises(ValueError, match="drift|param"):
         build_corpus_resumable(spark, df, out, val_fraction=0.0,

@@ -21,12 +21,14 @@ def _verdict_fingerprint(spark, out_dir):
 def _manifest_totals(spark, out_dir):
     """Per-drop_reason (n, scrub_hits) summed over the manifest, checked
     against the same counts over the verdicts on disk; each part records
-    each drop_reason once."""
+    each drop_reason once. The zero row that marks an empty part done
+    counts nothing, so a group summing to n = 0 has no verdicts."""
     m = spark.read.parquet(os.path.join(out_dir, "_manifest"))
     keys = [(r.part_id, r.drop_reason) for r in m.select("part_id", "drop_reason").collect()]
     assert len(keys) == len(set(keys)), "a (part_id, drop_reason) pair repeats"
     got = {r.drop_reason: (r.n, r.scrub_hits) for r in m.groupBy("drop_reason").agg(
-        F.sum("n").alias("n"), F.sum("scrub_hits").alias("scrub_hits")).collect()}
+        F.sum("n").alias("n"), F.sum("scrub_hits").alias("scrub_hits")).collect()
+        if r.n > 0}
     want = {r.drop_reason: (r.n, r.scrub_hits)
             for r in P.read_verdicts(spark, out_dir).groupBy("drop_reason").agg(
                 F.count("*").alias("n"),
@@ -78,8 +80,11 @@ def test_checkpoint_leaves_session_overwrite_mode(spark, tmp_path):
 
 
 def test_checkpoint_with_empty_parts(spark, tmp_path):
-    """Parts that receive no rows write nothing, count nothing and stay
-    unmarked; an empty input writes no manifest rows at all."""
+    """A part that receives no rows writes no data but one zero manifest
+    row, so it is done: a rerun resolves no bc factory (no model training
+    for zero rows) and re-scores nothing; an empty input marks every
+    part done."""
+    from dataquality_cli_spark.functions.udfs import broadcast_models
     from dataquality_cli_spark.sources.synth import corpus_to_rows, gen_corpus
 
     schema = "repo string, path string, commit string, lang string, content string"
@@ -88,11 +93,21 @@ def test_checkpoint_with_empty_parts(spark, tmp_path):
     P.run_with_checkpoint(spark, df, out, n_parts=8)
     assert P.read_verdicts(spark, out).count() == 3
     assert sum(n for n, _ in _manifest_totals(spark, out).values()) == 3
-    assert 0 < len(P.completed_parts(spark, out)) <= 3
+    assert P.completed_parts(spark, out) == set(range(8))
+
+    calls = []
+
+    def factory():
+        calls.append(1)
+        return broadcast_models(spark)
+
+    P.run_with_checkpoint(spark, df, out, n_parts=8, bc=factory)
+    assert calls == []
+    assert P.read_verdicts(spark, out).count() == 3
 
     empty = str(tmp_path / "empty")
     P.run_with_checkpoint(spark, spark.createDataFrame([], schema), empty, n_parts=2)
-    assert P.completed_parts(spark, empty) == set()
+    assert P.completed_parts(spark, empty) == {0, 1}
 
 
 def test_rerun_is_noop(spark, corpus_df, tmp_path):

@@ -38,7 +38,7 @@ def test_all_rows_survive_salting(spark, corpus_df):
 def test_run_pipeline_accepts_bc_factory(spark, corpus_df):
     """`bc` may be a zero-arg factory (the run_with_checkpoint /
     build_corpus_resumable contract) — run_pipeline must resolve it, so
-    EVERY entry point that funnels here (build_corpus included) shares
+    EVERY entry point that funnels here (the corpus build included) shares
     one contract instead of passing a function object into
     with_full_scores (regression: late AttributeError)."""
     from dataquality_cli_spark.functions.udfs import broadcast_models
